@@ -1,4 +1,5 @@
-"""Write-path semantics: append, MERGE upsert, idempotent append.
+"""Write-path semantics: append, MERGE upsert, idempotent append, and
+the maintenance verbs compact and delete.
 
 These are the reference's three pipeline variants, re-expressed as
 engine-level writers (SURVEY.md §2.1, §2.3, §7 step 2):
@@ -20,6 +21,21 @@ engine-level writers (SURVEY.md §2.1, §2.3, §7 step 2):
   reference's all-or-nothing COUNT check to a per-row left-anti join
   (only genuinely-new keys are appended).
 
+**One layout model** (Iceberg's partition specs,
+https://iceberg.apache.org/spec/#partition-evolution): a versioned
+table is a LIST of layouts ``{"dir", "partition_cols"}``, oldest
+first; the last one is active and takes new rows. A flat table is one
+layout with zero partition fields and a date-partitioned table is one
+layout with ``day``; both sit at the snapshot root (``dir == ""``) and
+their snapshot sidecar records ``"layouts": null``. Evolving the spec
+(:func:`evolve_partition_spec`) appends a layout, and then every layout
+lives in its own ``layout_NNN`` dir. Merge, compact and delete are each
+ONE body over that list (:func:`_merge_layouts`,
+:func:`_compact_layouts`, :func:`_delete_layouts`): work in a layout is
+scoped to the hive leaves the batch or predicate touches, and every
+other leaf is hardlinked into the new snapshot. The ``*_evolved`` names
+are the same bodies for tables with more than one layout.
+
 The pure DataFrame forms (``*_df``) are the algebra; the path forms add
 storage atomicity via a **versioned-commit layout** (VERDICT r02 item 4
 — reader-safe, unlike a rename swap which has a window where the table
@@ -29,9 +45,12 @@ directory doesn't exist):
       _CURRENT              ← text pointer, atomically replaced
       _COMMITS              ← append-only ledger of committed snapshots
       _LOCK                 ← present only while a writer is active
-      v_000001_<uuid>/…parquet          (unpartitioned)
-      v_000002_<uuid>/day=d1/…parquet   (partitioned; untouched leaves
-                                         hardlink the previous snapshot)
+      v_000001_<uuid>/…parquet          (flat: one layout, no fields)
+      v_000002_<uuid>/day=d1/…parquet   (one layout by day; untouched
+                                         leaves hardlink the previous
+                                         snapshot)
+      v_000003_<uuid>/layout_000/day=d1/…parquet
+                     /layout_001/day=d1/typ=a/…parquet  (spec evolved)
 
 A commit writes a fresh ``v_*`` directory, records it in ``_COMMITS``,
 then flips ``_CURRENT`` with ``os.replace`` (atomic on POSIX; on an
@@ -1244,7 +1263,7 @@ def expire_versions(
     sequence, or -1 for unparseable names).
 
     Storage note: snapshots share unchanged files via hardlinks
-    (:func:`_link_tree`), so sweeping a snapshot reclaims only the
+    (:func:`_link_leaves`), so sweeping a snapshot reclaims only the
     bytes unique to it — same semantics as manifest-based expiry on an
     object store.
 
@@ -1483,23 +1502,6 @@ def _next_version_dir(path: str) -> str:
     ]
     seq = (max(seqs) + 1) if seqs else 1
     return os.path.join(path, f"v_{seq:06d}_{uuid.uuid4().hex[:8]}")
-
-
-def _link_tree(src: str, dst: str) -> None:
-    """Recreate ``src`` under ``dst`` with hardlinked files — O(#files)
-    metadata ops, zero data copy; snapshots share storage and
-    ``rmtree`` on one only drops link counts. Falls back to a real copy
-    when the filesystem refuses links (cross-device)."""
-    os.makedirs(dst, exist_ok=True)
-    for entry in os.listdir(src):
-        s, d = os.path.join(src, entry), os.path.join(dst, entry)
-        if os.path.isdir(s):
-            _link_tree(s, d)
-        else:
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
 
 
 def _validate_keys(df: DataFrame, keys: list[str]) -> None:
@@ -1905,6 +1907,357 @@ def _atomic_swap(tmp: str, dst: str) -> None:
         shutil.rmtree(old, ignore_errors=True)
 
 
+def _table_layouts(path: str, op: str | None = None, evolved: bool = False):
+    """``(snapshot_dir, layouts, plain)`` for the table at ``path``.
+
+    ``layouts`` is the table's layout list, oldest first; the last one
+    is active and takes new rows. A snapshot without a recorded layout
+    map is one layout at its root under its recorded partition spec
+    (``[]`` when it records none); a pre-versioning plain directory
+    (``plain``) is one layout at the table root.
+
+    With ``op`` the caller is one verb and refuses the other table
+    family: ``op`` refuses spec-evolved tables (the ones whose layouts
+    live in their own dirs), ``op + "_evolved"`` refuses all others."""
+    cur = _current_version_name(path)
+    vdir = path if cur is None else os.path.join(path, cur)
+    meta = _load_snapshot_meta(vdir) or {}
+    layouts = meta.get("layouts") or [
+        {"dir": "", "partition_cols": list(meta.get("partition_spec") or [])}
+    ]
+    if op is not None and evolved and not layouts[0]["dir"]:
+        raise ValueError(f"{path!r} is not spec-evolved — use {op}")
+    if op is not None and not evolved and layouts[0]["dir"]:
+        raise ValueError(
+            f"{path!r} is a spec-evolved table (multiple partition "
+            f"layouts) — use {op}_evolved"
+        )
+    return vdir, layouts, cur is None
+
+
+def _layout_dir(root: str, lay: dict) -> str:
+    return os.path.normpath(os.path.join(root, lay["dir"]))
+
+
+def _leaf_dirs(root: str) -> set[str]:
+    """Relative dirs under ``root`` that directly contain parquet files
+    — the FULL hive leaf paths ('.' for an unpartitioned layout). Leaf
+    grain matters for multi-column specs: day=d16 may hold one written
+    type= leaf next to an untouched one, and linking at day grain would
+    duplicate the written one.
+
+    The walk descends only into hive directories (``col=value``), so a
+    layout at the snapshot root never counts the snapshot's sidecars as
+    leaves (``_manifest`` is per-snapshot, ``_change_data`` per-commit),
+    and a plain table's root never counts a ``v_*`` snapshot as one."""
+    leaves: set[str] = set()
+    for r, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if "=" in d]
+        if any(f.endswith(".parquet") for f in files):
+            leaves.add(os.path.relpath(r, root))
+    return leaves
+
+
+def _link_leaves(src: str, dst: str, leaves) -> None:
+    """Carry ``leaves`` of the layout at ``src`` into ``dst`` as
+    hardlinks — O(#files) metadata ops, zero data copy; snapshots share
+    storage and ``rmtree`` on one only drops link counts. Only each
+    leaf's own data files are linked, never its subdirectories: the '.'
+    leaf of a root layout would otherwise drag the snapshot's sidecars
+    and sibling leaves along. Falls back to a real copy when the
+    filesystem refuses links (cross-device)."""
+    os.makedirs(dst, exist_ok=True)
+    for leaf in leaves:
+        s, d = os.path.join(src, leaf), os.path.join(dst, leaf)
+        os.makedirs(d, exist_ok=True)
+        for f in os.listdir(s):
+            if f.endswith(".parquet"):
+                try:
+                    os.link(os.path.join(s, f), os.path.join(d, f))
+                except OSError:
+                    shutil.copy2(os.path.join(s, f), os.path.join(d, f))
+
+
+def _write_layout(df: DataFrame, cols: list[str], dst: str) -> None:
+    w = df.write.mode("overwrite")
+    if cols:
+        w = w.partitionBy(*cols)
+    w.parquet(dst)
+
+
+def _footprint(df: DataFrame, cols: list[str]) -> list[tuple]:
+    """The partition tuples ``df`` touches under ``cols`` — a bounded
+    driver-side list, one tuple per touched leaf, never per row. A
+    layout without partition fields is one leaf: ``[()]``."""
+    if not cols:
+        return [()]
+    return [tuple(r) for r in df.select(*cols).distinct().collect()]
+
+
+def _partition_tuple_filter(cols: list[str], tuples: list[tuple]):
+    """OR-of-AND equality predicate over partition columns — collected
+    from the (bounded, driver-side) distinct partition footprint of a
+    source batch; Catalyst folds it into PartitionFilters on the hive
+    scan, so the layout read prunes to exactly the touched leaves. A
+    one-column footprint is an IN list: no OR tree as deep as the
+    batch is wide. No columns and ``[()]`` is the whole layout.
+
+    NULL-safe: a NULL value is hive's default partition, a leaf like
+    any other — plain equality would leave its rows out of a rewrite
+    that replaces the leaf."""
+    from functools import reduce
+
+    if len(cols) == 1:
+        vals = {t[0] for t in tuples}
+        cond = F.col(cols[0]).isin([v for v in vals if v is not None])
+        return cond | F.col(cols[0]).isNull() if None in vals else cond
+    conds = [
+        reduce(
+            lambda a, b: a & b,
+            [F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(cols, t)],
+            F.lit(True),
+        )
+        for t in tuples
+    ]
+    return reduce(lambda a, b: a | b, conds, F.lit(False))
+
+
+def _commit_layouts(
+    path: str, vdir: str, keep_versions: int, plain: bool, **kw
+) -> None:
+    """Commit ``vdir``. A plain table's first commit then retires the
+    leaves its root held (loose root files for '.', the top-level hive
+    dirs otherwise): the snapshot now holds their rows or links."""
+    _commit_version(path, vdir, keep_versions, **kw)
+    for leaf in _leaf_dirs(path) if plain else ():
+        if leaf == ".":
+            for f in os.listdir(path):
+                if f.endswith(".parquet"):
+                    with contextlib.suppress(OSError):
+                        os.remove(os.path.join(path, f))
+        else:
+            top = os.path.join(path, leaf.split(os.sep, 1)[0])
+            shutil.rmtree(top, ignore_errors=True)
+
+
+def _merge_layouts(
+    spark: SparkSession,
+    path: str,
+    vdir_prev: str,
+    layouts: list[dict],
+    plain: bool,
+    source: DataFrame,
+    keys: list[str],
+    keep_versions: int,
+    emit_cdf: bool,
+    manifest_shard_files: int | None = None,
+) -> None:
+    """MERGE ``source`` into every layout — Iceberg-style copy-on-write:
+
+    - a source row whose key already exists in an OLD layout rewrites
+      that row IN PLACE, under the old spec (rewrites keep their file's
+      original layout; history's directory shape never changes);
+    - every other source row (new keys, and updates to rows already in
+      the active layout) merges into the ACTIVE layout under its spec.
+
+    Per layout: enumerate the batch's partition footprint, read + merge
+    only those partitions (partition pruning bounds the scan), write
+    them under the layout's spec, and hardlink every untouched leaf
+    from the previous snapshot. Leaf names are taken from what Spark
+    actually wrote — never reconstructed from collected values — so
+    URL-escaped renderings (':' → '%3A') cannot desynchronize. A layout
+    without partition fields is one leaf: a rewrite replaces all of it.
+
+    The change feed is one pre/post-image slice per rewritten layout
+    (:func:`merge_upsert_cdf_df`), bounded by the SAME partition
+    footprint as the rewrite, plus insert-only rows when the active
+    layout was empty. Slices union by NAME (layout reads order
+    partition columns last, and differently per spec). The cdf frames
+    share the scoped merge's lineage, so emitting the feed re-runs each
+    scoped join once (both jobs read only the touched partitions)."""
+    vdir = _next_version_dir(path)
+    seq = _seq_of(os.path.basename(vdir))
+    feeds: list[DataFrame] = []
+    remaining = source
+    for i, lay in enumerate(layouts):
+        cols = list(lay["partition_cols"])
+        lay_src, dst = _layout_dir(vdir_prev, lay), _layout_dir(vdir, lay)
+        leaves = _leaf_dirs(lay_src)
+        os.makedirs(dst, exist_ok=True)
+        active = i == len(layouts) - 1
+        if not leaves:
+            if active:  # empty active layout: first data under its spec
+                _write_layout(remaining, cols, dst)
+                if emit_cdf:
+                    feeds.append(insert_only_cdf(remaining, seq))
+            continue
+        parts = _footprint(remaining, cols)
+        if not parts:  # the batch touches no partition of this layout
+            _link_leaves(lay_src, dst, leaves)
+            continue
+        scoped = spark.read.parquet(lay_src).filter(
+            _partition_tuple_filter(cols, parts)
+        )
+        # the active layout takes every remaining row, and its rewrite
+        # footprint is the one just collected
+        upd = remaining
+        if not active:
+            lay_keys = scoped.select(*keys)
+            upd = remaining.join(lay_keys, keys, "semi")
+            remaining = remaining.join(lay_keys, keys, "anti")
+            # refine the rewrite scope to the partitions the matched
+            # rows actually touch; a layout without partition fields
+            # has no tuple footprint, so probe emptiness directly
+            # (code-review r13: the unconditional [()] rewrote the
+            # whole historical layout on every commit even with zero
+            # matched keys)
+            parts = (
+                _footprint(upd, cols)
+                if cols
+                else ([()] if upd.limit(1).count() > 0 else [])
+            )
+            scoped = scoped.filter(_partition_tuple_filter(cols, parts))
+        carried = leaves
+        if parts:
+            if emit_cdf:
+                merged, cdf = merge_upsert_cdf_df(
+                    scoped, upd, keys, commit_version=seq
+                )
+                feeds.append(cdf)
+            else:
+                merged = merge_upsert_df(scoped, upd, keys)
+            _write_layout(merged, cols, dst)
+            carried = leaves - _leaf_dirs(dst) if cols else set()
+        _link_leaves(lay_src, dst, carried)
+    if feeds:
+        # Written inside the still-uncommitted v_* dir (after the data —
+        # a root layout's overwrite truncates vdir — but BEFORE the
+        # pointer flip): a crash leaves feed+data orphaned together, and
+        # the underscore dir never shows up in snapshot table scans.
+        _functools.reduce(DataFrame.unionByName, feeds).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(vdir, CDF_DIR))
+    _commit_layouts(
+        path, vdir, keep_versions, plain,
+        partition_spec=list(layouts[-1]["partition_cols"]),
+        manifest_shard_files=manifest_shard_files,
+    )
+
+
+def _compact_layouts(
+    spark: SparkSession,
+    path: str,
+    vdir_prev: str,
+    layouts: list[dict],
+    plain: bool,
+    target_file_bytes: int,
+    shuffle: bool,
+) -> int:
+    """Compact every FULL hive leaf of every layout on its own (see
+    :func:`compact_parquet`); already-compact leaves are carried
+    unread. Returns the output data-file count."""
+    vdir = None if plain else _next_version_dir(path)
+    total = 0
+    for lay in layouts:
+        lay_src = _layout_dir(vdir_prev, lay)
+        dst = None if plain else _layout_dir(vdir, lay)
+        if dst:
+            os.makedirs(dst, exist_ok=True)
+        for leaf in sorted(_leaf_dirs(lay_src)):
+            src = os.path.normpath(os.path.join(lay_src, leaf))
+            files = [f for f in os.listdir(src) if f.endswith(".parquet")]
+            leaf_bytes = sum(
+                os.path.getsize(os.path.join(src, f)) for f in files
+            )
+            n = max(1, -(-leaf_bytes // target_file_bytes))
+            if len(files) <= n:
+                if dst:
+                    _link_leaves(lay_src, dst, [leaf])
+                total += len(files)
+                continue
+            df = spark.read.parquet(src)  # hive cols live in dir names
+            shaped = df.repartition(n) if shuffle else df.coalesce(n)
+            if dst:
+                shaped.write.mode("overwrite").parquet(
+                    os.path.normpath(os.path.join(dst, leaf))
+                )
+            else:
+                tmp = src + f".__compact__{uuid.uuid4().hex[:8]}"
+                shaped.write.mode("overwrite").parquet(tmp)
+                _atomic_swap(tmp, src)
+            total += n
+    if vdir:
+        _commit_version(path, vdir, keep_versions=2)
+    return total
+
+
+def _delete_layouts(
+    spark: SparkSession,
+    path: str,
+    vdir_prev: str,
+    layouts: list[dict],
+    plain: bool,
+    predicate: str,
+    keep_versions: int,
+) -> int:
+    """Rewrite every layout WITHOUT the rows matching ``predicate``,
+    UNDER ITS OWN SPEC, scoped to the leaves that actually contain
+    matches; every untouched leaf enters the new snapshot as hardlinks.
+    A leaf whose rows ALL match simply disappears; a layout emptied
+    entirely stays in the map with zero files (the census-driven read
+    skips it). Returns the number of rows deleted.
+
+    SQL DELETE semantics (code-review r14): only rows where the
+    predicate is TRUE are deleted — a NULL-valued predicate (e.g.
+    "x > 5" on a NULL x) keeps its row, same as DELETE in every SQL
+    engine; plain NOT(pred) would silently drop it, uncounted."""
+    from urllib.parse import unquote, urlparse
+
+    vdir = _next_version_dir(path)
+    deleted = 0
+    for lay in layouts:
+        cols = list(lay["partition_cols"])
+        lay_src, dst = _layout_dir(vdir_prev, lay), _layout_dir(vdir, lay)
+        leaves = _leaf_dirs(lay_src)
+        os.makedirs(dst, exist_ok=True)
+        if not leaves:
+            continue
+        df = spark.read.parquet(lay_src)
+        # ONE job per layout (code-review r14: leaves, tuple footprint,
+        # and the delete count used to be three separate scans): group
+        # the matching rows by physical file + partition tuple. Leaves
+        # come from the paths Spark actually scanned (never
+        # reconstructed from values — a delete can EMPTY a leaf, so the
+        # written-dirs diff the merge uses can't tell "untouched" from
+        # "fully deleted"); bounded by the subject's file footprint.
+        grouped = (
+            df.filter(predicate)
+            .groupBy(F.input_file_name().alias("__f"), *cols)
+            .count()
+            .collect()
+        )
+        deleted += sum(r["count"] for r in grouped)
+        touched = {
+            os.path.relpath(
+                os.path.dirname(unquote(urlparse(r["__f"]).path)), lay_src
+            )
+            for r in grouped
+        }
+        carried = leaves - touched
+        if grouped:
+            tuples = list({tuple(r[c] for c in cols) for r in grouped})
+            kept = df.filter(f"NOT coalesce(({predicate}), false)")
+            _write_layout(
+                kept.filter(_partition_tuple_filter(cols, tuples)), cols, dst
+            )
+            # a layout without partition fields is one leaf, rewritten
+            # whole
+            carried = carried - _leaf_dirs(dst) if cols else set()
+        _link_leaves(lay_src, dst, carried)
+    _commit_layouts(path, vdir, keep_versions, plain)
+    return deleted
+
+
 def merge_upsert(
     spark: SparkSession,
     target_path: str,
@@ -1917,27 +2270,24 @@ def merge_upsert(
 ) -> None:
     """MERGE a source batch into a Parquet directory table.
 
-    First write creates the table. Every merge — partitioned or not —
-    commits through the versioned layout (module docstring): write a new
-    ``v_*`` snapshot, record it in the ledger, atomically flip
-    ``_CURRENT``. Readers using :func:`read_table` always see a complete
-    snapshot, concurrent with any merge (reference semantic: MERGE is
-    atomic in BigQuery, ``dags/fx_pipeline_with_merge.py:90-111``); a
-    crash mid-merge leaves the previous snapshot current and the partial
-    ``v_*`` dir is swept by the next commit's retention pass.
+    First write creates the table; a pre-versioning plain directory is
+    migrated by its first merge. Every merge commits a new ``v_*``
+    snapshot through the versioned layout (module docstring): readers
+    using :func:`read_table` always see a complete snapshot, concurrent
+    with any merge (reference semantic: MERGE is atomic in BigQuery,
+    ``dags/fx_pipeline_with_merge.py:90-111``); a crash mid-merge leaves
+    the previous snapshot current and the partial ``v_*`` dir is swept
+    by the next commit's retention pass. Single-writer: concurrent
+    merges on the same table raise :class:`ConcurrentWriteError`
+    (lost-update protection).
 
-    With ``partition_col`` (must be a key and the table's physical
-    partition column), only source-touched partitions are read, merged,
-    and physically rewritten — the 100 TB-safe path: read scope and
-    write scope are both bounded by the batch's partition footprint, not
-    the table size. Untouched partitions enter the new snapshot as
-    hardlinked leaf directories (metadata-only; on an object store this
-    becomes manifest reuse). Leaf names are taken from what Spark
-    actually wrote — never reconstructed from collected values — so
-    URL-escaped renderings (':' → '%3A') cannot desynchronize.
-
-    Single-writer: concurrent merges on the same table raise
-    :class:`ConcurrentWriteError` (lost-update protection).
+    The table is one layout at the snapshot root, partitioned by
+    ``partition_col`` when given (must be a key and the table's
+    physical partition column): only source-touched partitions are then
+    read and rewritten — the 100 TB-safe path, read and write scope
+    bounded by the batch's partition footprint, not the table size
+    (:func:`_merge_layouts`). Spec-evolved tables are refused: use
+    :func:`merge_upsert_evolved`.
 
     ``emit_cdf=True`` additionally records the commit's change data
     feed (insert / update_preimage / update_postimage rows stamped with
@@ -1947,8 +2297,8 @@ def merge_upsert(
     aggregates without rescanning the table. The feed is part of the
     snapshot: written before the commit flip, swept with its version by
     retention, and (like the snapshot itself) recomputed byte-identically
-    if a crashed merge is re-run. Unpartitioned path only — the
-    partition-scoped path bounds its read scope by partition pruning,
+    if a crashed merge is re-run. Unpartitioned tables only — the
+    partition-scoped merge bounds its read scope by partition pruning,
     which the full-outer change join would defeat; emit the feed from a
     partition-scoped merge by running it per-partition.
 
@@ -1964,205 +2314,13 @@ def merge_upsert(
         )
     source = source.dropDuplicates(keys)
     with _write_lock(target_path):
-        cur = _current_version_name(target_path)
-        if cur is not None:
-            cur_meta = _load_snapshot_meta(os.path.join(target_path, cur))
-            if cur_meta and cur_meta.get("layouts"):
-                raise ValueError(
-                    f"{target_path!r} is a spec-evolved table (multiple "
-                    "partition layouts) — use merge_upsert_evolved"
-                )
-        if partition_col is None:
-            _merge_unpartitioned(
-                spark, target_path, source, keys, keep_versions, emit_cdf,
-                manifest_shard_files,
-            )
-        else:
-            _merge_partitioned(
-                spark, target_path, source, keys, partition_col,
-                keep_versions, manifest_shard_files,
-            )
-
-
-def _merge_unpartitioned(
-    spark: SparkSession,
-    target_path: str,
-    source: DataFrame,
-    keys: list[str],
-    keep_versions: int,
-    emit_cdf: bool = False,
-    manifest_shard_files: int | None = None,
-) -> None:
-    vdir = _next_version_dir(target_path)
-    ptr_exists = os.path.isfile(os.path.join(target_path, _CURRENT_PTR))
-    # One-time migration of a pre-versioning plain directory: its
-    # loose top-level files are the current table. Read them by
-    # explicit file list (immune to the new v_* subdir appearing in
-    # a directory listing), then retire them after the commit.
-    legacy_files = (
-        []
-        if ptr_exists
-        else [
-            os.path.join(target_path, f)
-            for f in (
-                os.listdir(target_path) if os.path.isdir(target_path) else []
-            )
-            if f.endswith(".parquet")
-        ]
-    )
-    seq = _seq_of(os.path.basename(vdir))
-    cdf = None
-    if ptr_exists:
-        base = read_table(spark, target_path)
-    elif legacy_files:
-        base = spark.read.parquet(*legacy_files)
-    else:
-        base = None
-    if base is not None:
-        if emit_cdf:
-            merged, cdf = merge_upsert_cdf_df(
-                base, source, keys, commit_version=seq
-            )
-        else:
-            merged = merge_upsert_df(base, source, keys)
-    else:
-        merged = source
-        if emit_cdf:
-            cdf = insert_only_cdf(source, seq)
-    merged.write.mode("overwrite").parquet(vdir)
-    if cdf is not None:
-        # Written inside the still-uncommitted v_* dir (after the data —
-        # the data's overwrite truncates vdir — but BEFORE the pointer
-        # flip): a crash leaves feed+data orphaned together, and the
-        # underscore dir never shows up in snapshot table scans.
-        cdf.write.mode("overwrite").parquet(os.path.join(vdir, CDF_DIR))
-    _commit_version(
-        target_path, vdir, keep_versions, partition_spec=[],
-        manifest_shard_files=manifest_shard_files,
-    )
-    for f in legacy_files:
-        with contextlib.suppress(OSError):
-            os.remove(f)
-
-
-def _merge_partitioned(
-    spark: SparkSession,
-    target_path: str,
-    source: DataFrame,
-    keys: list[str],
-    partition_col: str,
-    keep_versions: int,
-    manifest_shard_files: int | None = None,
-) -> None:
-    prefix = f"{partition_col}="
-    ptr_exists = os.path.isfile(os.path.join(target_path, _CURRENT_PTR))
-    legacy_leaves = (
-        []
-        if ptr_exists
-        else [
-            d
-            for d in (
-                os.listdir(target_path) if os.path.isdir(target_path) else []
-            )
-            if d.startswith(prefix)
-            and os.path.isdir(os.path.join(target_path, d))
-        ]
-    )
-    if not ptr_exists and not legacy_leaves:
-        # first write: a fresh partitioned snapshot
-        vdir = _next_version_dir(target_path)
-        source.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-        _commit_version(
-            target_path, vdir, keep_versions,
-            partition_spec=[partition_col],
-            manifest_shard_files=manifest_shard_files,
+        vdir, _, plain = _table_layouts(target_path, "merge_upsert")
+        cols = [partition_col] if partition_col else []
+        _merge_layouts(
+            spark, target_path, vdir, [{"dir": "", "partition_cols": cols}],
+            plain, source, keys, keep_versions, emit_cdf,
+            manifest_shard_files,
         )
-        return
-
-    prev_dir = (
-        _resolve_data_dir(target_path) if ptr_exists else target_path
-    )
-    # Partition-scoped rewrite: enumerate the batch's partitions (a small
-    # driver-side list — one entry per touched day/key, not per row),
-    # read + merge only those partitions (partition pruning bounds the
-    # scan), then snapshot: rewritten leaves from the merge, untouched
-    # leaves hardlinked from the previous snapshot.
-    parts = [r[0] for r in source.select(partition_col).distinct().collect()]
-    target = spark.read.parquet(prev_dir)
-    scoped_target = target.filter(F.col(partition_col).isin(parts))
-    merged = merge_upsert_df(scoped_target, source, keys)
-    vdir = _next_version_dir(target_path)
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-    touched = {
-        d
-        for d in os.listdir(vdir)
-        if d.startswith(prefix) and os.path.isdir(os.path.join(vdir, d))
-    }
-    for leaf in os.listdir(prev_dir):
-        if (
-            leaf.startswith(prefix)
-            and leaf not in touched
-            and os.path.isdir(os.path.join(prev_dir, leaf))
-        ):
-            _link_tree(
-                os.path.join(prev_dir, leaf), os.path.join(vdir, leaf)
-            )
-    _commit_version(
-        target_path, vdir, keep_versions, partition_spec=[partition_col],
-        manifest_shard_files=manifest_shard_files,
-    )
-    # retire migrated legacy top-level leaves after the commit
-    for leaf in legacy_leaves:
-        shutil.rmtree(os.path.join(target_path, leaf), ignore_errors=True)
-
-
-def _reject_spec_evolved(path: str, op: str) -> None:
-    """Loud refusal for writers that rewrite the whole tree FLAT: on a
-    spec-evolved snapshot, a flat rewrite + ``_write_snapshot_meta``'s
-    layouts carry-forward would stamp a stale layout map over flat data
-    and every subsequent ``read_table`` would raise (code-review r13 —
-    the silent-table-bricking hole). Per-layout delete/compact is the
-    r14 candidate; until then refusing is the correct behavior."""
-    cur = _current_version_name(path)
-    if cur is None:
-        return
-    meta = _load_snapshot_meta(os.path.join(path, cur))
-    if meta and meta.get("layouts"):
-        raise ValueError(
-            f"{op} does not support spec-evolved tables (multiple "
-            f"partition layouts) yet: {path!r} — operate per layout, or "
-            "run the operation before evolving the spec"
-        )
-
-
-def _leaf_dirs(root: str) -> set[str]:
-    """Relative dirs under ``root`` that directly contain parquet files
-    — the FULL hive leaf paths ('.' for an unpartitioned layout). Leaf
-    grain matters for multi-column specs: day=d16 may hold one written
-    type= leaf next to an untouched one, and linking at day grain would
-    duplicate the written one."""
-    leaves: set[str] = set()
-    for r, _dirs, files in os.walk(root):
-        if any(f.endswith(".parquet") for f in files):
-            leaves.add(os.path.relpath(r, root))
-    return leaves
-
-
-def _partition_tuple_filter(cols: list[str], tuples: list[tuple]):
-    """OR-of-AND equality predicate over partition columns — collected
-    from the (bounded, driver-side) distinct partition footprint of a
-    source batch; Catalyst folds it into PartitionFilters on the hive
-    scan, so the layout read prunes to exactly the touched leaves."""
-    from functools import reduce
-
-    conds = [
-        reduce(
-            lambda a, b: a & b,
-            [F.col(c) == F.lit(v) for c, v in zip(cols, t)],
-        )
-        for t in tuples
-    ]
-    return reduce(lambda a, b: a | b, conds)
 
 
 def evolve_partition_spec(
@@ -2200,8 +2358,7 @@ def evolve_partition_spec(
             f"{path!r} is not a versioned table (no {_CURRENT_PTR})"
         )
     with _write_lock(path):
-        cur = _current_version_name(path)
-        prev_dir = os.path.join(path, cur)
+        prev_dir, old, _ = _table_layouts(path)
         meta = _load_snapshot_meta(prev_dir)
         if meta is None or meta.get("partition_spec") is None:
             raise ValueError(
@@ -2209,44 +2366,25 @@ def evolve_partition_spec(
                 "run one normal commit (e.g. a merge) to record its "
                 "partition spec before evolving it"
             )
-        layouts = meta.get("layouts")
-        if layouts is None:
-            layouts = [
-                {
-                    "dir": "layout_000",
-                    "partition_cols": list(meta["partition_spec"]),
-                }
-            ]
-            migrate_flat = True
-        else:
-            layouts = [dict(lay) for lay in layouts]
-            migrate_flat = False
+        # a root layout moves under layout_000; evolved ones keep their dir
+        layouts = [
+            {
+                "dir": lay["dir"] or "layout_000",
+                "partition_cols": list(lay["partition_cols"]),
+            }
+            for lay in old
+        ]
         if list(new_partition_cols) == list(layouts[-1]["partition_cols"]):
             raise ValueError(
                 f"no-op spec evolution: {new_partition_cols} is already "
                 "the active partition spec"
             )
         vdir = _next_version_dir(path)
-        if migrate_flat:
-            dst0 = os.path.join(vdir, "layout_000")
-            os.makedirs(dst0, exist_ok=True)
-            for entry in os.listdir(prev_dir):
-                if entry in (_SNAPSHOT_META, CDF_DIR, _MANIFEST_DIR):
-                    continue  # sidecar+census are per-snapshot; CDF per-commit
-                s = os.path.join(prev_dir, entry)
-                d = os.path.join(dst0, entry)
-                if os.path.isdir(s):
-                    _link_tree(s, d)
-                else:
-                    try:
-                        os.link(s, d)
-                    except OSError:
-                        shutil.copy2(s, d)
-        else:
-            for lay in layouts:
-                src = os.path.join(prev_dir, lay["dir"])
-                if os.path.isdir(src):
-                    _link_tree(src, os.path.join(vdir, lay["dir"]))
+        for src, lay in zip(old, layouts):
+            lay_src = _layout_dir(prev_dir, src)
+            _link_leaves(
+                lay_src, os.path.join(vdir, lay["dir"]), _leaf_dirs(lay_src)
+            )
         new_dir = f"layout_{len(layouts):03d}"
         os.makedirs(os.path.join(vdir, new_dir), exist_ok=True)
         layouts.append(
@@ -2313,54 +2451,22 @@ def merge_upsert_evolved(
     keep_versions: int = 2,
     emit_cdf: bool = False,
 ) -> None:
-    """MERGE into a SPEC-EVOLVED versioned table (one created by
-    :func:`evolve_partition_spec`): Iceberg-style copy-on-write across
-    layouts —
+    """:func:`merge_upsert` for a SPEC-EVOLVED table (one created by
+    :func:`evolve_partition_spec`): keys an old layout already holds
+    are updated in place under that layout's spec, every other row
+    merges into the active layout (:func:`_merge_layouts`).
 
-    - a source row whose key already exists in an OLD layout rewrites
-      that row IN PLACE, under the old spec (rewrites keep their file's
-      original layout; history's directory shape never changes);
-    - every other source row (new keys, and updates to rows already in
-      the active layout) merges into the ACTIVE layout under the new
-      spec.
-
-    Contract, mirroring :func:`merge_upsert`'s partitioned path: every
-    layout's partition columns must be among ``keys`` (a row's identity
-    pins its partition, so each layout's read scope is prunable by the
-    batch's partition footprint — collected driver-side, one tuple per
-    touched leaf, never per row) and key columns must be non-null.
-    Read scope per layout = the batch's partition tuples, column-pruned
-    to ``keys`` for the membership split; write scope = leaves holding
-    matched keys, everything else hardlinked through. At 100 TB both
-    scopes are bounded by the batch, not the table.
-
-    ``emit_cdf=True`` additionally records the commit's change data
-    feed under ``v_*/_change_data`` (read it back with
-    :func:`read_table_changes`): each layout's scoped merge emits its
-    own pre/post-image slice via :func:`merge_upsert_cdf_df` — so the
-    feed stays bounded by the SAME partition footprint as the rewrite,
-    unlike the unpartitioned path's full-outer feed — and the active
-    layout's inserts ride :func:`insert_only_cdf` when the layout was
-    empty. Slices union by NAME (layout reads order partition columns
-    last, and differently per spec). Note the cdf frames share the
-    scoped merge's lineage, so emitting the feed re-runs each scoped
-    join once (both jobs read only the touched partitions).
+    Contract: every layout's partition columns must be among ``keys``
+    (a row's identity pins its partition, so each layout's read scope
+    is prunable by the batch's partition footprint) and key columns
+    must be non-null. At 100 TB read and write scope are bounded by the
+    batch, not the table. ``emit_cdf`` as in :func:`merge_upsert`, each
+    layout's feed slice bounded by the same footprint as its rewrite.
     """
     source = source.dropDuplicates(keys)
     _validate_keys(source, keys)
     with _write_lock(path):
-        cur = _current_version_name(path)
-        if cur is None:
-            raise ValueError(
-                f"{path!r} is not a versioned table (no {_CURRENT_PTR})"
-            )
-        prev_dir = os.path.join(path, cur)
-        meta = _load_snapshot_meta(prev_dir)
-        layouts = (meta or {}).get("layouts")
-        if not layouts:
-            raise ValueError(
-                f"{path!r} is not spec-evolved — use merge_upsert"
-            )
+        vdir, layouts, _ = _table_layouts(path, "merge_upsert", True)
         for lay in layouts:
             missing = [c for c in lay["partition_cols"] if c not in keys]
             if missing:
@@ -2368,119 +2474,9 @@ def merge_upsert_evolved(
                     f"layout {lay['dir']!r} partition cols {missing} must "
                     "be merge keys (row identity pins its partition)"
                 )
-        vdir = _next_version_dir(path)
-        seq = _seq_of(os.path.basename(vdir))
-        cdf_parts: list[DataFrame] = []
-        remaining = source
-        for i, lay in enumerate(layouts):
-            cols = list(lay["partition_cols"])
-            lay_src = os.path.join(prev_dir, lay["dir"])
-            dst = os.path.join(vdir, lay["dir"])
-            active = i == len(layouts) - 1
-            has_data = _layout_has_data(lay_src)
-            if not has_data and not active:
-                os.makedirs(dst, exist_ok=True)
-                continue
-            # batch partition footprint for THIS layout's spec — a
-            # bounded driver-side list (one tuple per touched leaf)
-            parts = [
-                tuple(r)
-                for r in remaining.select(*cols).distinct().collect()
-            ] if cols else [()]
-            if has_data:
-                scoped = spark.read.parquet(lay_src)
-                if cols and parts:
-                    scoped = scoped.filter(
-                        _partition_tuple_filter(cols, parts)
-                    )
-                elif cols:
-                    scoped = scoped.filter(F.lit(False))
-            else:
-                scoped = None
-            if active:
-                upd, rest = remaining, None
-            elif scoped is None or not parts:
-                upd, rest = None, remaining
-            else:
-                lay_keys = scoped.select(*keys)
-                upd = remaining.join(lay_keys, keys, "semi")
-                rest = remaining.join(lay_keys, keys, "anti")
-            wrote = False
-            if upd is not None:
-                if scoped is not None:
-                    # refine the rewrite scope to the partitions the
-                    # matched rows actually touch; an UNPARTITIONED
-                    # layout has no tuple footprint, so probe emptiness
-                    # directly (code-review r13: the unconditional [()]
-                    # rewrote the whole historical layout on every
-                    # commit even with zero matched keys)
-                    upd_parts = (
-                        [
-                            tuple(r)
-                            for r in upd.select(*cols).distinct().collect()
-                        ]
-                        if cols
-                        else ([()] if upd.limit(1).count() > 0 else [])
-                    )
-                    if upd_parts:
-                        scoped2 = (
-                            scoped.filter(
-                                _partition_tuple_filter(cols, upd_parts)
-                            )
-                            if cols
-                            else scoped
-                        )
-                        if emit_cdf:
-                            merged, cdf = merge_upsert_cdf_df(
-                                scoped2, upd, keys, commit_version=seq
-                            )
-                            cdf_parts.append(cdf)
-                        else:
-                            merged = merge_upsert_df(scoped2, upd, keys)
-                        wrote = True
-                    else:  # no matched rows — nothing to rewrite here
-                        merged = None
-                else:
-                    # empty active layout: first data under the new spec
-                    merged = upd
-                    wrote = (
-                        bool(parts) if cols else upd.limit(1).count() > 0
-                    )
-                    if wrote and emit_cdf:
-                        cdf_parts.append(insert_only_cdf(upd, seq))
-                if wrote and merged is not None:
-                    w = merged.write.mode("overwrite")
-                    if cols:
-                        w = w.partitionBy(*cols)
-                    w.parquet(dst)
-            # carry untouched leaves of this layout through as hardlinks
-            written = _leaf_dirs(dst) if os.path.isdir(dst) else set()
-            if has_data:
-                for leaf in _leaf_dirs(lay_src):
-                    if leaf not in written:
-                        _link_tree(
-                            os.path.join(lay_src, leaf),
-                            os.path.join(dst, leaf),
-                        )
-            os.makedirs(dst, exist_ok=True)
-            if rest is not None:
-                remaining = rest
-        if emit_cdf and cdf_parts:
-            feed = cdf_parts[0]
-            for part in cdf_parts[1:]:
-                feed = feed.unionByName(part)
-            # inside the still-uncommitted v_* dir, before the pointer
-            # flip — crash orphans data and feed together (the
-            # unpartitioned merge path's convention)
-            feed.write.mode("overwrite").parquet(
-                os.path.join(vdir, CDF_DIR)
-            )
-        _commit_version(
-            path,
-            vdir,
-            keep_versions,
-            partition_spec=list(layouts[-1]["partition_cols"]),
-            layouts=layouts,
+        _merge_layouts(
+            spark, path, vdir, layouts, False, source, keys,
+            keep_versions, emit_cdf,
         )
 
 
@@ -2563,23 +2559,14 @@ def append_landing_batch(
     return moved
 
 
-def _tree_parquet_bytes(d: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(d):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
-
-
 def compact_parquet(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     shuffle: bool = False,
 ) -> int:
-    """Small-file compaction: rewrite a Parquet table into
-    ceil(total_bytes / target) files. Returns the output file count.
+    """Small-file compaction: rewrite each leaf of a Parquet table into
+    ceil(leaf_bytes / target) files. Returns the output file count.
 
     The small-files problem is THE silent scale killer for append-heavy
     tables (a streaming sink or per-batch ``merge_upsert`` emitting
@@ -2589,17 +2576,18 @@ def compact_parquet(
     ``shuffle=True`` for an even-size rebalance when input files are
     badly skewed.
 
-    **Partitioned tables are compacted per leaf** (VERDICT r03 item 9):
-    each ``col=value`` directory is sized and rewritten independently —
-    a skewed leaf with thousands of small files is fixed without
-    touching (or even reading) well-laid-out leaves, which are
-    hardlinked through unchanged. Matches ``merge_upsert``'s
+    **Compaction is per leaf** (VERDICT r03 item 9): each hive leaf
+    (the table root, when unpartitioned) is sized and rewritten
+    independently — a skewed leaf with thousands of small files is
+    fixed without touching (or even reading) well-laid-out leaves,
+    which are carried through unchanged. Matches ``merge_upsert``'s
     partition-scoped write scope.
 
     Versioned tables (``_CURRENT`` pointer present) compact into a new
     ``v_*`` snapshot + ledger commit — fully reader-safe; plain
     directories fall back to the rename swap (single-writer contract,
-    no concurrent readers).
+    no concurrent readers). Spec-evolved tables are refused: use
+    :func:`compact_parquet_evolved`.
 
     File sizing uses local file sizes — correct for local/NFS storage.
     On an object store, swap in the Hadoop
@@ -2607,81 +2595,10 @@ def compact_parquet(
     API); the directory walk enumerates the same paths.
     """
     with _write_lock(path):
-        _reject_spec_evolved(path, "compact_parquet")
-        data_dir = _resolve_data_dir(path)
-        versioned = data_dir != path
-        leaves = (
-            [
-                d
-                for d in os.listdir(data_dir)
-                if "=" in d and os.path.isdir(os.path.join(data_dir, d))
-            ]
-            if os.path.isdir(data_dir)
-            else []
+        vdir, layouts, plain = _table_layouts(path, "compact_parquet")
+        return _compact_layouts(
+            spark, path, vdir, layouts, plain, target_file_bytes, shuffle
         )
-        if leaves:
-            return _compact_partitioned(
-                spark, path, data_dir, sorted(leaves), target_file_bytes,
-                shuffle, versioned,
-            )
-        df = spark.read.parquet(data_dir)
-        n = max(1, -(-_tree_parquet_bytes(data_dir) // target_file_bytes))
-        shaped = df.repartition(n) if shuffle else df.coalesce(n)
-        if versioned:
-            vdir = _next_version_dir(path)
-            shaped.write.mode("overwrite").parquet(vdir)
-            _commit_version(path, vdir, keep_versions=2)
-            return n
-        tmp = path + f".__compact__{uuid.uuid4().hex[:8]}"
-        shaped.write.mode("overwrite").parquet(tmp)
-        _atomic_swap(tmp, path)
-        return n
-
-
-def _compact_partitioned(
-    spark: SparkSession,
-    path: str,
-    data_dir: str,
-    leaves: list[str],
-    target_file_bytes: int,
-    shuffle: bool,
-    versioned: bool,
-) -> int:
-    total_files = 0
-    if versioned:
-        vdir = _next_version_dir(path)
-        os.makedirs(vdir, exist_ok=True)
-        for leaf in leaves:
-            src = os.path.join(data_dir, leaf)
-            n_files = sum(
-                f.endswith(".parquet") for f in os.listdir(src)
-            )
-            n = max(1, -(-_tree_parquet_bytes(src) // target_file_bytes))
-            if n_files <= n:
-                # already compact: carry the leaf as hardlinks, no read
-                _link_tree(src, os.path.join(vdir, leaf))
-                total_files += n_files
-                continue
-            df = spark.read.parquet(src)  # partition col lives in the dir name
-            shaped = df.repartition(n) if shuffle else df.coalesce(n)
-            shaped.write.mode("overwrite").parquet(os.path.join(vdir, leaf))
-            total_files += n
-        _commit_version(path, vdir, keep_versions=2)
-        return total_files
-    for leaf in leaves:
-        src = os.path.join(data_dir, leaf)
-        n_files = sum(f.endswith(".parquet") for f in os.listdir(src))
-        n = max(1, -(-_tree_parquet_bytes(src) // target_file_bytes))
-        if n_files <= n:
-            total_files += n_files
-            continue
-        df = spark.read.parquet(src)
-        shaped = df.repartition(n) if shuffle else df.coalesce(n)
-        tmp = src + f".__compact__{uuid.uuid4().hex[:8]}"
-        shaped.write.mode("overwrite").parquet(tmp)
-        _atomic_swap(tmp, src)
-        total_files += n
-    return total_files
 
 
 def compact_parquet_evolved(
@@ -2690,82 +2607,17 @@ def compact_parquet_evolved(
     target_file_bytes: int = 128 * 1024 * 1024,
     shuffle: bool = False,
 ) -> int:
-    """Small-file compaction ACROSS a spec-evolved table — with
-    :func:`delete_rows_evolved` this completes flat-rewriter parity
-    for evolved tables (the two operations ``_reject_spec_evolved``
-    deferred): every layout is compacted per FULL hive leaf under its
-    own spec (multi-column leaves like day=/typ= are sized at leaf
-    grain, same as the merge path's write scope), already-compact
-    leaves hardlink through unread, and ONE commit carries the layout
-    map forward. Returns the snapshot's output data-file count.
-
-    Scale: identical story to :func:`compact_parquet`'s per-leaf
-    path — a skewed leaf with thousands of streaming-sized files is
-    fixed without reading well-laid-out leaves, in any layout, and
-    readers always see a complete snapshot.
+    """:func:`compact_parquet` ACROSS a spec-evolved table: every layout
+    is compacted per FULL hive leaf under its own spec (multi-column
+    leaves like day=/typ= are sized at leaf grain, same as the merge
+    path's write scope), and ONE commit carries the layout map forward.
+    Returns the snapshot's output data-file count.
     """
     with _write_lock(path):
-        cur = _current_version_name(path)
-        if cur is None:
-            raise ValueError(
-                f"{path!r} is not a versioned table (no {_CURRENT_PTR})"
-            )
-        prev_dir = os.path.join(path, cur)
-        meta = _load_snapshot_meta(prev_dir)
-        layouts = (meta or {}).get("layouts")
-        if not layouts:
-            raise ValueError(
-                f"{path!r} is not spec-evolved — use compact_parquet"
-            )
-        vdir = _next_version_dir(path)
-        nonempty = _nonempty_layout_dirs(prev_dir, meta, layouts)
-        total_files = 0
-        for lay in layouts:
-            lay_src = os.path.join(prev_dir, lay["dir"])
-            dst = os.path.join(vdir, lay["dir"])
-            os.makedirs(dst, exist_ok=True)
-            if lay["dir"] not in nonempty:
-                continue
-            for leaf in sorted(_leaf_dirs(lay_src)):
-                src = (
-                    lay_src if leaf == "." else os.path.join(lay_src, leaf)
-                )
-                d = dst if leaf == "." else os.path.join(dst, leaf)
-                files = [
-                    f for f in os.listdir(src) if f.endswith(".parquet")
-                ]
-                leaf_bytes = sum(
-                    os.path.getsize(os.path.join(src, f)) for f in files
-                )
-                n = max(1, -(-leaf_bytes // target_file_bytes))
-                if len(files) <= n:
-                    # already compact: hardlink the leaf's FILES (not
-                    # _link_tree — '.' leaves would recurse into
-                    # sibling hive dirs)
-                    os.makedirs(d, exist_ok=True)
-                    for f in files:
-                        try:
-                            os.link(
-                                os.path.join(src, f), os.path.join(d, f)
-                            )
-                        except OSError:
-                            shutil.copy2(
-                                os.path.join(src, f), os.path.join(d, f)
-                            )
-                    total_files += len(files)
-                    continue
-                df = spark.read.parquet(src)  # hive cols live in dir name
-                shaped = df.repartition(n) if shuffle else df.coalesce(n)
-                shaped.write.mode("overwrite").parquet(d)
-                total_files += n
-        _commit_version(
-            path,
-            vdir,
-            keep_versions=2,
-            partition_spec=list(layouts[-1]["partition_cols"]),
-            layouts=layouts,
+        vdir, layouts, _ = _table_layouts(path, "compact_parquet", True)
+        return _compact_layouts(
+            spark, path, vdir, layouts, False, target_file_bytes, shuffle
         )
-        return total_files
 
 
 def cluster_write(
@@ -2843,24 +2695,20 @@ def delete_rows(
     remains time-travelable; set 1 for immediate physical removal at
     the next commit). Returns the number of rows deleted.
 
-    Single-writer via the same lock as every other writer. At 100 TB
-    pair this with a partition predicate so the rewrite is bounded by
-    the partitions the subject can live in.
+    A partitioned table is rewritten under its own spec, only in the
+    leaves holding matches (:func:`_delete_layouts`): at 100 TB the
+    rewrite is bounded by the partitions the subject can live in.
+    Single-writer via the same lock as every other writer. Spec-evolved
+    tables are refused: use :func:`delete_rows_evolved`.
     """
     with _write_lock(target_path):
-        _reject_spec_evolved(target_path, "delete_rows")
-        cur = read_table(spark, target_path)
-        n_before = cur.count()
-        # SQL DELETE semantics (code-review r14): only rows where the
-        # predicate is TRUE are deleted — a NULL-valued predicate
-        # (e.g. "x > 5" on a NULL x) keeps its row, same as DELETE in
-        # every SQL engine; plain NOT(pred) would silently drop it.
-        kept = cur.filter(f"NOT coalesce(({predicate}), false)")
-        vdir = _next_version_dir(target_path)
-        kept.write.mode("overwrite").parquet(vdir)
-        n_after = spark.read.parquet(vdir).count()
-        _commit_version(target_path, vdir, keep_versions)
-        return n_before - n_after
+        vdir, layouts, plain = _table_layouts(target_path, "delete_rows")
+        if plain and not _leaf_dirs(vdir):
+            raise ValueError(f"{target_path!r} holds no table")
+        return _delete_layouts(
+            spark, target_path, vdir, layouts, plain, predicate,
+            keep_versions,
+        )
 
 
 def delete_rows_evolved(
@@ -2869,115 +2717,18 @@ def delete_rows_evolved(
     predicate: str,
     keep_versions: int = 2,
 ) -> int:
-    """Subject deletion across a SPEC-EVOLVED table (closing the
-    r13-documented gap: flat rewriters refuse evolved tables because a
-    flat rewrite under a carried layout map bricks the table): each
-    layout is rewritten WITHOUT its matching rows UNDER ITS OWN SPEC,
-    scoped to the leaves that actually contain matches — the matching
-    rows' partition footprint is collected driver-side (bounded by the
-    subject's spread, one tuple per touched leaf, never per row) and
-    every untouched leaf enters the new snapshot as hardlinks. A leaf
-    whose rows ALL match simply disappears; a layout emptied entirely
-    stays in the map with zero files (the census-driven read skips
-    it). Returns the number of rows deleted. SQL DELETE semantics:
-    only rows where ``predicate`` evaluates TRUE are deleted —
-    NULL-predicate rows are kept and not counted.
-
-    Same GDPR semantics as :func:`delete_rows`: committed through the
-    versioned layout, ``keep_versions`` bounds how long the subject
-    stays time-travelable. At 100 TB the rewrite scope is
+    """:func:`delete_rows` across a SPEC-EVOLVED table: each layout is
+    rewritten WITHOUT its matching rows UNDER ITS OWN SPEC, scoped to
+    the leaves that contain matches. At 100 TB the rewrite scope is
     (matching leaves) x (their layouts) — pair the subject predicate
     with a partition bound when the subject's footprint is known.
     """
     with _write_lock(target_path):
-        cur = _current_version_name(target_path)
-        if cur is None:
-            raise ValueError(
-                f"{target_path!r} is not a versioned table (no "
-                f"{_CURRENT_PTR})"
-            )
-        prev_dir = os.path.join(target_path, cur)
-        meta = _load_snapshot_meta(prev_dir)
-        layouts = (meta or {}).get("layouts")
-        if not layouts:
-            raise ValueError(
-                f"{target_path!r} is not spec-evolved — use delete_rows"
-            )
-        vdir = _next_version_dir(target_path)
-        nonempty = _nonempty_layout_dirs(prev_dir, meta, layouts)
-        deleted = 0
-        for lay in layouts:
-            cols = list(lay["partition_cols"])
-            lay_src = os.path.join(prev_dir, lay["dir"])
-            dst = os.path.join(vdir, lay["dir"])
-            os.makedirs(dst, exist_ok=True)
-            if lay["dir"] not in nonempty:
-                continue
-            df = spark.read.parquet(lay_src)
-            matches = df.filter(predicate)  # predicate IS TRUE rows
-            if cols:
-                # ONE job per layout (code-review r14: leaves, tuple
-                # footprint, and the delete count used to be three
-                # separate scans): group the matching rows by physical
-                # file + partition tuple. Leaves come from the paths
-                # Spark actually scanned (never reconstructed from
-                # values — a delete can EMPTY a leaf, so the
-                # written-dirs diff the merge path uses can't tell
-                # "untouched" from "fully deleted"); bounded by the
-                # subject's file footprint.
-                from urllib.parse import unquote, urlparse
-
-                grouped = matches.groupBy(
-                    F.input_file_name().alias("__f"), *cols
-                ).count().collect()
-                touched_leaves = {
-                    os.path.relpath(
-                        os.path.dirname(unquote(urlparse(r["__f"]).path)),
-                        lay_src,
-                    )
-                    for r in grouped
-                }
-                tuples = list(
-                    {tuple(r[c] for c in cols) for r in grouped}
-                )
-                deleted += sum(r["count"] for r in grouped)
-                if tuples:
-                    scoped = df.filter(
-                        _partition_tuple_filter(cols, tuples)
-                    )
-                    # SQL DELETE semantics: only predicate-TRUE rows
-                    # go; NULL-predicate rows are kept (code-review
-                    # r14 — NOT(pred) silently dropped them, uncounted)
-                    kept = scoped.filter(
-                        f"NOT coalesce(({predicate}), false)"
-                    )
-                    kept.write.mode("overwrite").partitionBy(
-                        *cols
-                    ).parquet(dst)
-                written = _leaf_dirs(dst) if os.path.isdir(dst) else set()
-                for leaf in _leaf_dirs(lay_src):
-                    if leaf not in written and leaf not in touched_leaves:
-                        _link_tree(
-                            os.path.join(lay_src, leaf),
-                            os.path.join(dst, leaf),
-                        )
-            else:
-                n_match = matches.count()
-                if n_match:
-                    deleted += n_match
-                    df.filter(
-                        f"NOT coalesce(({predicate}), false)"
-                    ).write.mode("overwrite").parquet(dst)
-                else:
-                    _link_tree(lay_src, dst)
-        _commit_version(
-            target_path,
-            vdir,
+        vdir, layouts, _ = _table_layouts(target_path, "delete_rows", True)
+        return _delete_layouts(
+            spark, target_path, vdir, layouts, False, predicate,
             keep_versions,
-            partition_spec=list(layouts[-1]["partition_cols"]),
-            layouts=layouts,
         )
-        return deleted
 
 
 def zorder_write(

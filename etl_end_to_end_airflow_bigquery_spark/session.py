@@ -14,7 +14,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def local_cpus() -> str:
+    """The local core budget, ``$SPARK_GRAFT_CPUS`` (default 32), read
+    at call time: ``local[N]``, the shuffle-partition default and the
+    bench record's file name all agree even when the variable is set
+    after this module is imported."""
+    return os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def get_spark(
@@ -29,7 +35,7 @@ def get_spark(
     everything set here is cluster-safe (session-scoped SQL conf only,
     plus local[] fallbacks used when no master is configured).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
@@ -39,7 +45,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or _DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         # Read parquet TIMESTAMP (isAdjustedToUTC=false) as NTZ so values
         # match the DuckDB oracle byte-for-byte regardless of host TZ.

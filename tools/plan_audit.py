@@ -21,9 +21,10 @@ way the batch rows count joins and shuffles.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Arrow-batched Python stages that are the documented design (multimodal
 # codecs, pandas stats) — ArrowEvalPython/MapInPandas there is expected.

@@ -22,7 +22,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _run(spark, fn, sf_dir):

@@ -14,10 +14,11 @@ Usage: python tools/scaling_probe.py [--md SCALING.md] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIRS = [
     ("/root/testdata/sf0.001", 0.001),

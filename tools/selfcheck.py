@@ -14,12 +14,13 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_end_to_end_airflow_bigquery_spark.schemas import TESTDATA_TABLES
 
