@@ -18,13 +18,15 @@ associative, so partitioning-independent — folds in-row via
 ``aggregate()`` (no explode, no extra shuffle). The DuckDB oracle runs
 the same scaled-integer arithmetic; sqrt/divide then operate on
 identical doubles. Hyperplanes come from a fixed numpy seed and are
-embedded as literals in both engines.
+embedded as literals in both engines. The quantizer paths (Lloyd
+training, PQ encode, ADC scoring) run the same arithmetic as numpy
+kernels over Arrow batches — exact twins of the SQL folds.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import spread_small_scan as _spread  # guide §2.5
@@ -427,95 +429,48 @@ def _cents_arr(cent_rows) -> "F.Column":
     )
 
 
-def _with_cells_lit(
-    v: DataFrame, cent_rows, keep_centroid: bool = False
-) -> DataFrame:
+def _with_cells_lit(v: DataFrame, cent_rows) -> DataFrame:
     """``v`` + its nearest-centroid ``cell`` column, computed IN-ROW
     over a literal centroid array — a pure projection: zero exchanges,
-    zero joins, where :func:`_assign_cells` costs a broadcast cross +
-    a grouped struct-max exchange (guide §2.4 "remove shuffles
-    outright"). EXACT-identical to the aggregate spelling: the cosine
-    is the same ``dot_fold`` fixed-point expression on the same
-    doubles, and ``array_max`` over ``struct(cos_to_seed, neg_cell)``
-    uses the very struct ordering ``F.max`` used — max cosine, ties →
-    lowest cell (A/B-verified equal at sf0.01/sf0.1).
-
-    ``keep_centroid=True`` additionally emits the winning centroid's
-    ``ce``/``cn`` (rides in the same struct; the comparator never
-    reaches those fields because ``neg_cell`` is unique) so residual
-    computation needs no join back to the centroid table.
+    zero joins (guide §2.4 "remove shuffles outright"). The cosine is
+    the ``dot_fold`` fixed-point expression, and ``array_max`` over
+    ``struct(cos_to_seed, neg_cell)`` picks the max cosine, ties →
+    lowest cell; :func:`nearest_cell_np` is its numpy twin.
     """
     dot = dot_fold("e", "c.ce")
     best = F.expr(
         "array_max(transform(__cents, c -> struct("
         f"{dot} / (sqrt(norm2) * sqrt(c.cn)) AS cos_to_seed, "
-        "-c.cell AS neg_cell, c.ce AS ce, c.cn AS cn)))"
+        "-c.cell AS neg_cell)))"
     )
-    out = (
+    return (
         v.withColumn("__cents", _cents_arr(cent_rows))
         .withColumn("__best", best)
         .withColumn("cell", -F.col("__best.neg_cell"))
+        .drop("__cents", "__best")
     )
-    if keep_centroid:
-        out = out.withColumn("__ce", F.col("__best.ce")).withColumn(
-            "__cn", F.col("__best.cn")
-        )
-    return out.drop("__cents", "__best")
 
 
 def _probe_cells_lit(q: DataFrame, cent_rows, nprobe: int) -> DataFrame:
     """Per-query top-``nprobe`` centroids by cosine, IN-ROW (explode of
     a sorted literal-array slice) — replaces the broadcast-cross +
     row_number window of the probe stage with a projection (guide
-    §2.4). Ordering is EXACT-identical to the window spelling
-    ``orderBy(cos_to_seed DESC, cell)``: ``array_sort`` on
-    ``struct(neg_cos, cell, ce, cn)`` compares neg_cos ascending
-    (= cosine descending), then cell ascending; ce/cn ride along for
-    the residual/LUT stage (never compared — (neg_cos, cell) is
-    already a total order).
+    §2.4). ``array_sort`` on ``struct(neg_cos, cell)`` is the window
+    order ``(cos_to_seed DESC, cell)``.
 
-    ``q`` must carry ``qe``/``qn``; output adds (cell, ce, cn) one row
-    per probed cell.
+    ``q`` must carry ``qe``/``qn``; output adds ``cell``, one row per
+    probed cell.
     """
     dot = dot_fold("qe", "c.ce")
     probes = F.expr(
         f"slice(array_sort(transform(__cents, c -> struct("
         f"-({dot} / (sqrt(qn) * sqrt(c.cn))) AS neg_cos, "
-        f"c.cell AS cell, c.ce AS ce, c.cn AS cn))), 1, {int(nprobe)})"
+        f"c.cell AS cell))), 1, {int(nprobe)})"
     )
     return (
         q.withColumn("__cents", _cents_arr(cent_rows))
         .withColumn("__p", F.explode(probes))
-        .select(
-            *[c for c in q.columns],
-            F.col("__p.cell").alias("cell"),
-            F.col("__p.ce").alias("ce"),
-            F.col("__p.cn").alias("cn"),
-        )
-    )
-
-
-def _argmax_cell(scored: DataFrame) -> DataFrame:
-    """(vec_id, cell, cos_to_seed) → (vec_id, cell) keeping the highest
-    cosine, ties → lowest cell id.
-
-    Struct-max aggregation, NOT a row_number window: a grouped max gets
-    partial aggregation map-side, so only ~N pre-aggregated rows cross
-    the exchange instead of the full N·K scored cross product being
-    shuffled and sorted (VERDICT r03 item 5). The tie rule is pinned
-    inside the struct ordering (max cosine, then max of the NEGATED cell
-    = lowest cell) — fully deterministic, same result as the window
-    spelling."""
-    return (
-        scored.groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("cos_to_seed"), (-F.col("cell")).alias("neg_cell")
-                )
-            ).alias("__m")
-        )
-        .select("vec_id", (-F.col("__m.neg_cell")).alias("cell"))
+        .select(*q.columns, F.col("__p.cell").alias("cell"))
     )
 
 
@@ -550,27 +505,6 @@ def _train_sample(df: DataFrame, fraction: float = TRAIN_FRACTION) -> DataFrame:
     return df.filter((h % _TRAIN_BUCKETS) < cutoff)
 
 
-def _assign_cells(v: DataFrame, centroids: DataFrame) -> DataFrame:
-    """vec_id → nearest centroid by cosine (ties → lowest cell id).
-
-    One broadcast of the K centroids, one in-row dot per (vector,
-    centroid), argmax via a partial-aggregating struct max
-    (:func:`_argmax_cell`) — O(N·K·d) compute but only ~N rows ever
-    cross the exchange."""
-    scored = (
-        v.select("vec_id", "e", "norm2")
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            "vec_id",
-            "cell",
-            (
-                F.expr(dot_fold("e", "ce")) / (F.sqrt("norm2") * F.sqrt("cn"))
-            ).alias("cos_to_seed"),
-        )
-    )
-    return _argmax_cell(scored)
-
-
 def ivf_cells_kmeans(
     embeddings: DataFrame,
     n_seeds: int = N_IVF_SEEDS,
@@ -586,30 +520,19 @@ def ivf_cells_kmeans(
     seeding as :func:`ivf_cells`); each Lloyd round reassigns the
     TRAINING SAMPLE (``train_fraction`` of the corpus by deterministic
     vec_id hash — see :func:`_train_sample`) to the nearest centroid
-    and recomputes centroids as the per-cell, per-dimension mean —
-    entirely JVM-side: exact fixed-point SUMs keyed (cell, dim) with
-    map-side partial aggregation (the exchange carries K·d rows),
-    overflow-proof via a decimal(38,0) accumulator; the assignment is a
-    broadcast cross of K centroids folded by a partial-aggregating
-    struct max. Engine-exact: scaled-int sums and a pinned divide order
-    make every centroid component bit-identical in the DuckDB oracle,
-    so cell assignments — and therefore search results — hash-match.
-    Cells that lose all sampled members drop out (deterministically, in
-    both engines).
+    and recomputes centroids as the per-cell, per-dimension mean of
+    exact fixed-point sums (see :func:`_lloyd`). Engine-exact:
+    scaled-int sums and a pinned divide order make every centroid
+    component bit-identical in the DuckDB oracle, so cell assignments —
+    and therefore search results — hash-match. Cells that lose all
+    sampled members drop out (deterministically, in both engines).
 
     At 100 TB this is the index-build step: n_iters bounded scans of
     the persisted training sample (FAISS practice: train on a sample,
     assign everything), then ONE full-corpus assignment pass. Each
     round's centroid table (K rows — bounded regardless of corpus size)
-    is materialized to the driver and re-created as a literal frame:
-    without this, every round's plan embeds COPIES of all prior rounds'
-    subtrees (cents is referenced by both the assignment and the means
-    of the next round), so the lineage grows exponentially in n_iters —
-    fatal at production iteration counts. The K-row collect is the same
-    driver-side centroid state every distributed k-means keeps (e.g.
-    Spark MLlib's KMeans); doubles round-trip bit-exactly, verified by
-    an A/B run (identical search results, ~10% faster even at 2
-    rounds).
+    is driver state, the same as Spark MLlib's KMeans keeps; re-entering
+    it as a literal keeps the lineage from growing with n_iters.
     """
     va, cents = kmeans_vectors(embeddings, n_seeds, n_iters, dim, train_fraction)
     return va.select("vec_id", "cell"), cents
@@ -627,11 +550,7 @@ def kmeans_vectors(
     PLUS its ``cell`` column — computed in ONE in-row projection over
     the literal centroids (r15, guide §2.4), so callers that need
     (e, norm2, cell) together (the IVF search lists, SemDeDup's
-    within-cell join, the residual encode) no longer pay the
-    ``v.join(cells, "vec_id")`` shuffle that re-attaching the
-    assignment used to cost. Training arithmetic is unchanged — same
-    exact fixed-point means, same tie rules — so centroids and
-    assignments are bit-identical to the r14 spelling (A/B-verified)."""
+    within-cell join) pay no ``v.join(cells, "vec_id")`` shuffle."""
     va, cent_rows = _kmeans_state(embeddings, n_seeds, n_iters, dim, train_fraction)
     cents = embeddings.sparkSession.createDataFrame(
         cent_rows, schema="cell bigint, ce array<double>, cn double"
@@ -646,71 +565,12 @@ def _kmeans_state(
     dim: int = EMB_DIM,
     train_fraction: float = TRAIN_FRACTION,
 ) -> tuple[DataFrame, list]:
-    """(va, cent_rows): the Lloyd trainer returning the collected
-    centroid ROWS (the driver-side state each round materializes
-    anyway) so in-row consumers skip re-collecting the literal frame."""
-    v = _vectors(embeddings)
-    # Lloyd refinement runs on the deterministic training sample (see
-    # _train_sample); only the FINAL assignment scans the full corpus.
-    # The sample is persisted across rounds — n_iters re-scans of the
-    # source would otherwise re-read parquet and recompute norms per
-    # round, and at 100 TB the training set is the bounded piece you
-    # want resident, exactly like FAISS keeping its train matrix in RAM.
-    tv = _spread(_train_sample(v, train_fraction)).persist()
-    # Seed centroids collected up front (n_seeds rows — the same bounded
-    # driver state every later round keeps anyway): with literal
-    # centroids, EVERY round's assignment is an in-row projection
-    # (guide §2.4) — the per-round crossJoin + struct-max exchange of
-    # the r14 spelling is gone, and each Lloyd round is exactly one
-    # grouped-means job over (cell, dim).
-    cent_rows = (
-        v.filter(F.col("vec_id") < n_seeds)
-        .select(
-            F.col("vec_id").alias("cell"),
-            F.col("e").alias("ce"),
-            F.col("norm2").alias("cn"),
-        )
-        .collect()
-    )
-    scale = F.lit(float(MEAN_SCALE))
-    for _ in range(n_iters):
-        member = _with_cells_lit(tv, cent_rows)
-        # Per-cell per-dimension exact fixed-point means, keyed
-        # (cell, dim) after a posexplode rather than as `dim` separate
-        # wide aggregates: hash partial aggregation combines map-side,
-        # so the exchange still carries only K·d pre-aggregated rows,
-        # and the narrow plan codegens ~4× faster than the 64-column
-        # decimal aggregate it replaces (measured 1.07 s vs 4.02 s
-        # first-compile, 0.07 s vs 0.18 s warm, bit-identical output).
-        # decimal(38,0) accumulator (ADVICE r03): each member
-        # contributes up to ~1e12 per dimension, so a BIGINT sum
-        # overflows past ~9.2M members per cell under ANSI mode;
-        # decimal(38,0) holds ~1e26 members.
-        ex = member.select("cell", F.posexplode("e").alias("__p", "__v"))
-        sums = ex.groupBy("cell", "__p").agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum(
-                F.floor(F.col("__v") * scale).cast("decimal(38,0)")
-            ).alias("__s"),
-        )
-        comp = sums.select(
-            "cell",
-            "__p",
-            (F.col("__s").cast("double") / scale / F.col("__n")).alias("__c"),
-        )
-        cents = (
-            comp.groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__p", "__c"))),
-                    lambda s: s["__c"],
-                ).alias("ce")
-            )
-            .withColumn("cn", F.expr(dot_fold("ce", "ce")))
-        )
-        cent_rows = cents.collect()
-    tv.unpersist()
-    return _with_cells_lit(_spread(v), cent_rows), cent_rows
+    """(va, cent_rows): the Lloyd-trained centroid ROWS (cell, ce, cn)
+    and the corpus vectors with their in-row nearest ``cell``."""
+    del dim  # the width comes from the data
+    q, _ = _fit(embeddings, n_seeds, n_iters, None, 0, None, train_fraction)
+    cent_rows = q.cent_rows()
+    return _with_cells_lit(_spread(_vectors(embeddings)), cent_rows), cent_rows
 
 
 def ivf_topk_kmeans(
@@ -733,8 +593,7 @@ def ivf_topk_kmeans(
     # probe ranking is the in-row sorted-slice over literal centroids
     # instead of a broadcast cross + row_number window. Search results
     # are bit-identical (same dots, same tie order).
-    va, cents = kmeans_vectors(embeddings, n_seeds, n_iters)
-    cent_rows = cents.collect()
+    va, cent_rows = _kmeans_state(embeddings, n_seeds, n_iters)
     vc = va.select("vec_id", "e", "norm2", "cell")
     q = _probe_cells_lit(
         va.filter(query_pred).select(
@@ -866,132 +725,482 @@ PQ_K = 32                      # codes per sub-codebook
 PQ_ITERS = 1                   # Lloyd refinement rounds per sub-quantizer
 ADC_SCALE = "1000000000.0"     # fixed-point scale for the ADC score sum
 
+# --- exact numpy twins of the fixed-point folds --------------------------
+#
+# The quantizer passes (Lloyd rounds, encode, ADC scoring) run as numpy
+# kernels over Arrow batches (``mapInArrow``). Each twin below performs
+# the IEEE operations of one SQL spelling in the same order, with the
+# same BIGINT folds and the same ANSI errors, so every centroid, code and
+# score is bit-identical to the SQL arithmetic the DuckDB oracles run
+# (pinned against the Spark spellings in tests/test_ann_kernels.py).
 
-def _subvectors(v: DataFrame) -> DataFrame:
-    """(vec_id, s, x, xn): each vector split into PQ_M contiguous
-    subvectors with exact squared subnorms. The posexplode is a narrow
-    transformation (no shuffle) — N·M rows exist only inside the stage
-    that consumes them."""
-    slices = F.array(
-        *[
-            F.slice(F.col("e"), s * PQ_SUBDIM + 1, PQ_SUBDIM)
-            for s in range(PQ_M)
-        ]
+_I64_MAX = 2**63 - 1
+_I64_MIN = -(2**63)
+_ROWS = 1024  # rows per numpy step: bounds the (rows, M, K, sub) temporaries
+
+
+def _floor_long(a: np.ndarray) -> np.ndarray:
+    """``floor(double)`` → BIGINT: floor, then the JVM's saturating cast
+    (past BIGINT → its bound, NaN → 0)."""
+    f = np.floor(a)
+    hi, lo = f >= 2.0**63, f < -(2.0**63)
+    out = np.where(hi | lo | np.isnan(f), 0.0, f).astype(np.int64)
+    out[hi] = _I64_MAX
+    out[lo] = _I64_MIN
+    return out
+
+
+def _fold_sum(t: np.ndarray) -> np.ndarray:
+    """BIGINT terms summed over the last axis left to right, as
+    ``aggregate(…, acc + t)`` adds them under ANSI: a partial sum outside
+    BIGINT raises ``[ARITHMETIC_OVERFLOW]``. Terms too small to overflow
+    in any order skip the exact check."""
+    n = t.shape[-1]
+    if t.size and max(int(t.max()), -int(t.min())) * n > _I64_MAX:
+        for row in t.reshape(-1, n).tolist():
+            acc = 0
+            for x in row:
+                acc += x
+                if not _I64_MIN <= acc <= _I64_MAX:
+                    raise ArithmeticError("[ARITHMETIC_OVERFLOW] long overflow")
+    return t.sum(axis=-1)
+
+
+def dot_fold_np(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """:func:`dot_fold` over the last axis of two float64 arrays."""
+    scale = float(DOT_SCALE)
+    return _fold_sum(_floor_long((a * b) * scale)).astype(np.float64) / scale
+
+
+def _divide(num: np.ndarray, den: np.ndarray) -> np.ndarray:
+    """Double division under ANSI: a zero divisor raises."""
+    if np.any(den == 0):
+        raise ArithmeticError("[DIVIDE_BY_ZERO] Division by zero")
+    return num / den
+
+
+def nearest_cell_np(
+    e: np.ndarray, norm2: np.ndarray, ce: np.ndarray, cn: np.ndarray
+) -> np.ndarray:
+    """Index of each vector's nearest centroid by cosine (centroids
+    sorted by cell) — :func:`_with_cells_lit`'s ``array_max`` over
+    ``struct(cos, -cell)``: ``argmax`` takes the first maximum (ties →
+    lowest cell) and, like Spark's ordering, ranks NaN highest."""
+    cos = _divide(
+        dot_fold_np(e[:, None, :], ce[None]),
+        np.sqrt(norm2)[:, None] * np.sqrt(cn),
     )
-    return (
-        v.select("vec_id", F.posexplode(slices).alias("s", "x"))
-        .withColumn("xn", F.expr(dot_fold("x", "x")))
-    )
+    return np.argmax(cos, axis=1)
 
 
-def _assign_codes(sv: DataFrame, cb: DataFrame) -> DataFrame:
-    """(vec_id, s, code): nearest sub-codeword by exact L2 (ties →
-    lowest code). d² = ‖x‖² − 2·x·c + ‖c‖² from the exact fixed-point
-    dots, so the argmin is bit-identical in any engine; the argmin
-    itself is a partial-aggregating struct max (only ~N·M pre-aggregated
-    rows cross the exchange, never N·M·K)."""
-    d2 = F.col("xn") - 2.0 * F.expr(dot_fold("x", "ce")) + F.col("cn")
-    scored = sv.join(F.broadcast(cb), "s").select(
-        "vec_id", "s", "code", d2.alias("d2")
-    )
-    return (
-        scored.groupBy("vec_id", "s")
-        .agg(
-            F.max(
-                F.struct((-F.col("d2")).alias("neg_d2"),
-                         (-F.col("code")).alias("neg_code"))
-            ).alias("__m")
-        )
-        .select("vec_id", "s", (-F.col("__m.neg_code")).alias("code"))
-    )
+def nearest_code_np(
+    x: np.ndarray, xn: np.ndarray, cb: np.ndarray, cbn: np.ndarray
+) -> np.ndarray:
+    """(n, M) index of each subvector's nearest sub-codeword (codewords
+    sorted by code) by d² = (‖x‖² − 2·x·c) + ‖c‖², ties → lowest code:
+    the max over ``struct(-d², -code)`` of the SQL spelling. ``x`` is
+    (n, M, sub), ``xn`` (n, M), ``cb`` (M, K, sub), ``cbn`` (M, K)."""
+    d2 = (xn[..., None] - 2.0 * dot_fold_np(x[:, :, None, :], cb[None])) + cbn
+    return np.argmax(-d2, axis=-1)
 
 
-# In-row nearest-sub-codeword: d² = ‖x‖² − 2·x·c + ‖c‖² from the exact
-# fixed-point dots (identical expression to _assign_codes), argmin via
-# array_max over struct(neg_d2, neg_code) — the same comparator the
-# grouped struct-max used, so ties (→ lowest code) decide identically.
-def _code_argmin_sql(x: str, xn: str, cb_slot: str) -> str:
-    dot = dot_fold(x, "k.ce")
-    return (
-        f"-array_max(transform({cb_slot}, "
-        f"k -> struct(-(({xn} - (2.0 * {dot})) + k.cn) AS neg_d2, "
-        "-k.code AS neg_code))).neg_code"
-    )
+def adc_terms_np(lut: np.ndarray) -> np.ndarray:
+    """The ADC's fixed-point term per table entry: ``floor(v·1e9 + 0.5)``."""
+    return _floor_long(lut * float(ADC_SCALE) + 0.5)
 
 
-def _cb_attach(df: DataFrame, cb_rows) -> DataFrame:
-    """``df`` + the trained codebook as a ``__cb`` column
-    (array-by-subspace of (code, ce, cn) structs) via a ONE-ROW
-    broadcast cross — the repo's adjudicated bounded-scalar pattern.
+def adc_np(terms: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """ADC score of code rows ``codes`` (n, M) against one query's term
+    table ``terms`` (M, K): Σₛ terms[s, code_s] as a BIGINT fold, then
+    one double division."""
+    t = terms[np.arange(terms.shape[0]), codes]
+    return _fold_sum(t).astype(np.float64) / float(ADC_SCALE)
 
-    Why not a literal: an M·K nested literal is a ~15k-node expression
-    tree; parsing + analyzing it cost seconds of DRIVER time per query
-    construction (guide §7.3 — measured on the first spelling of this
-    refactor). A one-row LocalTableScan broadcast carries the same
-    values with a constant-size plan."""
-    spark = df.sparkSession
+
+def _cents_np(rows) -> tuple:
+    """(cells, ce, cn) arrays of centroid rows (cell, ce, cn), sorted by
+    cell so that an ``argmax`` index is the lowest cell on ties."""
+    rows = sorted((int(c), list(ce), float(cn)) for c, ce, cn in rows)
+    return tuple(np.array(col) for col in zip(*rows))
+
+
+def _book_np(rows) -> tuple:
+    """(codes, cb, cbn) arrays of codeword rows (s, code, ce, cn): per
+    subspace sorted by code (ties → lowest code), padded to one width
+    with an unreachable codeword (code ``_I64_MAX``, ‖c‖² = +inf)."""
     by_s: dict[int, list] = {}
-    for r in cb_rows:
-        by_s.setdefault(int(r["s"]), []).append(r)
-    data = [
-        [
-            (int(r["code"]), [float(x) for x in r["ce"]], float(r["cn"]))
-            for r in sorted(by_s[s], key=lambda r: int(r["code"]))
+    for s, code, ce, cn in rows:
+        by_s.setdefault(int(s), []).append((int(code), list(ce), float(cn)))
+    m, width = max(by_s) + 1, max(len(v) for v in by_s.values())
+    sub = len(by_s[min(by_s)][0][1])
+    codes = np.full((m, width), _I64_MAX, np.int64)
+    cb = np.zeros((m, width, sub))
+    cbn = np.full((m, width), np.inf)
+    for s, words in by_s.items():
+        words.sort()
+        codes[s, : len(words)] = [w[0] for w in words]
+        cb[s, : len(words)] = [w[1] for w in words]
+        cbn[s, : len(words)] = [w[2] for w in words]
+    return codes, cb, cbn
+
+
+def _by_rows(fn, a: np.ndarray) -> np.ndarray:
+    """``fn`` over row chunks of ``a`` (bounds the (rows, M, K, sub)
+    temporaries), concatenated."""
+    return np.concatenate(
+        [fn(c) for c in np.array_split(a, max(1, -(-len(a) // _ROWS)))]
+    )
+
+
+class _Quantizer:
+    """Trained IVF-PQ state as numpy arrays, shipped to the kernels in
+    their closure: ``cents`` from :func:`_cents_np`, ``book`` from
+    :func:`_book_np`. Either level may be None: plain PQ has no cells,
+    the coarse quantizer alone no codes."""
+
+    def __init__(self, cents: tuple | None = None, book: tuple | None = None):
+        self.cents, self.book = cents, book
+
+    def cent_rows(self) -> list:
+        cells, ce, cn = self.cents
+        return [
+            Row(cell=int(c), ce=e.tolist(), cn=float(n))
+            for c, e, n in zip(cells, ce, cn)
         ]
-        for s in range(PQ_M)
-    ]
-    cb_df = spark.createDataFrame(
-        [(data,)],
-        "__cb array<array<struct<code:bigint,ce:array<double>,cn:double>>>",
-    )
-    return df.crossJoin(F.broadcast(cb_df))
+
+    def cb_rows(self) -> list:
+        codes, cb, cbn = self.book
+        return [
+            (s, int(codes[s, j]), cb[s, j].tolist(), float(cbn[s, j]))
+            for s in range(len(codes))
+            for j in range(codes.shape[1])
+            if codes[s, j] != _I64_MAX
+        ]
+
+    def residual(self, e: np.ndarray):
+        """(cell index or None, e minus its nearest centroid)."""
+        if self.cents is None:
+            return None, e
+        _, ce, cn = self.cents
+        cell = _by_rows(lambda c: nearest_cell_np(c, dot_fold_np(c, c), ce, cn), e)
+        return cell, e - ce[cell]
+
+    def subvectors(self, r: np.ndarray) -> np.ndarray:
+        """(n, M, sub) contiguous subvectors of residuals ``r``."""
+        m, sub = PQ_M, PQ_SUBDIM
+        if self.book is not None:
+            m, sub = self.book[1].shape[0], self.book[1].shape[2]
+        return r[:, : m * sub].reshape(len(r), m, sub)
+
+    def encode(self, x: np.ndarray) -> np.ndarray:
+        """(n, M) nearest-code indices of subvectors ``x``."""
+        _, cb, cbn = self.book
+        return _by_rows(
+            lambda c: nearest_code_np(c, dot_fold_np(c, c), cb, cbn), x
+        ).astype(np.int64)
+
+    def lut(self, r: np.ndarray) -> np.ndarray:
+        """The (M, K) integer ADC table of one query residual ``r``."""
+        _, cb, _ = self.book
+        x = self.subvectors(r[None])[0]
+        return adc_terms_np(dot_fold_np(x[:, None, :], cb))
+
+    def refit(self, rows) -> "_Quantizer":
+        """This quantizer with its finest level replaced by the means of
+        the collected Lloyd sums (s, g, p, n, t): component p of group
+        g's mean is ``CAST(t AS DOUBLE) / 1e12 / n``, its norm the
+        ``dot_fold`` of the mean with itself."""
+        scale = float(MEAN_SCALE)
+        means: dict[tuple[int, int], dict[int, float]] = {}
+        for r in rows:
+            means.setdefault((r["s"], r["g"]), {})[r["p"]] = (
+                float(r["t"]) / scale / r["n"]
+            )
+        keys = sorted(means)
+        ce = np.array([[means[k][p] for p in sorted(means[k])] for k in keys])
+        cn = dot_fold_np(ce, ce)
+        if self.book is None:
+            return _Quantizer(_cents_np((g, e, n) for (_, g), e, n in zip(keys, ce, cn)))
+        return _Quantizer(
+            self.cents, _book_np((s, g, e, n) for (s, g), e, n in zip(keys, ce, cn))
+        )
 
 
-def _codes_arr_sql(e: str = "e") -> str:
-    """SQL (over ``__cb``): ALL ``PQ_M`` sub-codes of vector column
-    ``e`` as one in-row array — the full PQ encode as a projection,
-    replacing the posexplode→join→argmin-exchange pipeline. ‖x‖² is
-    hoisted per subspace (computed once, not once per codeword) with
-    the same ``dot_fold`` the exploded frame precomputed, so d² values
-    are bit-identical."""
-    slice_x = f"slice({e}, sidx * {PQ_SUBDIM} + 1, {PQ_SUBDIM})"
-    xn = dot_fold("sv0.x", "sv0.x")
-    argmin = _code_argmin_sql(
-        "sv.x", "sv.xn", "element_at(__cb, sv.s + 1)"
+def _arrow_vectors(batch) -> tuple[np.ndarray, np.ndarray]:
+    """(vec_id int64, embedding as float64 (n, d)) of an Arrow batch."""
+    ids = batch.column("vec_id").to_numpy(zero_copy_only=False)
+    col = batch.column("embedding")
+    n = len(ids)
+    flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    d = len(flat) // n if n else 0
+    lens = col.value_lengths().to_numpy(zero_copy_only=False)
+    if col.null_count or (n and (lens != d).any()):
+        raise ValueError("embeddings must be non-null and of one width")
+    return ids.astype(np.int64), flat.reshape(n, d)
+
+
+def _partials(keys: np.ndarray, vals: np.ndarray):
+    """Exact per-key (key, count, Σ vals) over row chunks small enough
+    that no int64 sum can wrap: each chunk is its own partial, and Spark
+    adds the partials as decimal(38,0)."""
+    hi = max(1, int(vals.max()), -int(vals.min())) if vals.size else 1
+    step = max(1, _I64_MAX // hi)
+    for lo in range(0, len(keys), step):
+        k, v = keys[lo : lo + step], vals[lo : lo + step]
+        order = np.argsort(k, kind="stable")
+        k = k[order]
+        starts = np.flatnonzero(np.r_[True, k[1:] != k[:-1]])
+        counts = np.diff(np.r_[starts, len(k)])
+        yield k[starts], counts, np.add.reduceat(v[order], starts, axis=0)
+
+
+def _lloyd_arrow(q: _Quantizer):
+    """``mapInArrow`` kernel of one Lloyd round of ``q``'s finest level:
+    assign each training vector to its nearest cell — or, with a
+    codebook, each residual subvector to its nearest code — and emit the
+    batch's exact partial sums of ``floor(v·1e12)`` per (s, g, p) with
+    member counts: the map-side combine of the grouped decimal mean.
+    Coarse rows carry s = 0, g = cell; PQ rows s = subspace, g = code."""
+    scale = float(MEAN_SCALE)
+
+    def fn(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            _, e = _arrow_vectors(batch)
+            if not len(e):
+                continue
+            cell, r = q.residual(e)
+            if q.book is None:
+                s_of = np.zeros(len(q.cents[0]), np.int32)
+                g_of, keys, vals = q.cents[0], cell, _floor_long(e * scale)
+            else:
+                x = q.subvectors(r)
+                m, width = q.book[0].shape
+                s_of = np.repeat(np.arange(m, dtype=np.int32), width)
+                g_of = q.book[0].ravel()
+                keys = (np.arange(m) * width + q.encode(x)).ravel()
+                vals = _floor_long(x * scale).reshape(len(keys), -1)
+            p = vals.shape[1]
+            for k, n, t in _partials(keys, vals):
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.repeat(s_of[k], p)),
+                        pa.array(np.repeat(g_of[k], p)),
+                        pa.array(np.tile(np.arange(p, dtype=np.int32), len(k))),
+                        pa.array(np.repeat(n, p).astype(np.int64)),
+                        pa.array(t.ravel()),
+                    ],
+                    names=["s", "g", "p", "n", "t"],
+                )
+
+    return fn
+
+
+def _lloyd(sample: DataFrame, q: _Quantizer, n_iters: int) -> _Quantizer:
+    """THE Lloyd trainer, for the coarse centroids and the PQ codebooks
+    alike: ``n_iters`` rounds over the training sample, each ONE Arrow
+    pass emitting exact integer partials, summed per (s, g, p) in
+    decimal(38,0) — a BIGINT sum would overflow past ~9.2M members of
+    one group under ANSI — and collected as the bounded K·d (or M·K·sub)
+    rows the driver turns into the next means. Groups that lose all
+    members drop out, in both engines."""
+    for _ in range(n_iters):
+        rows = (
+            sample.mapInArrow(
+                _lloyd_arrow(q), "s int, g bigint, p int, n bigint, t bigint"
+            )
+            .groupBy("s", "g", "p")
+            .agg(
+                F.sum("n").alias("n"),
+                F.sum(F.col("t").cast("decimal(38,0)")).alias("t"),
+            )
+            .collect()
+        )
+        q = q.refit(rows)
+    return q
+
+
+def _fit(
+    embeddings: DataFrame,
+    n_seeds: int | None,
+    kmeans_iters: int,
+    n_codes: int | None,
+    pq_iters: int,
+    query_pred: str | None = None,
+    train_fraction: float = TRAIN_FRACTION,
+) -> tuple[_Quantizer, list]:
+    """Train the quantizers: returns (quantizer, [(q_id, qe)] query rows).
+
+    ONE bounded collect brings the driver every row it needs — the
+    ``n_seeds`` coarse seeds and ``n_codes`` PQ seeds (the first vectors
+    by vec_id, whose residual subvectors seed each sub-codebook) and the
+    ``query_pred`` rows. Then ``kmeans_iters`` coarse and ``pq_iters``
+    PQ Lloyd rounds run over the persisted deterministic training sample
+    (:func:`_train_sample`). ``n_seeds=None`` trains plain PQ (no
+    cells), ``n_codes=None`` the coarse level alone."""
+    first = max(n_seeds or 0, n_codes or 0)
+    isq = F.lit(False) if query_pred is None else F.coalesce(
+        F.expr(query_pred), F.lit(False)
     )
+    head, queries = {}, []
+    for r in (
+        embeddings.filter((F.col("vec_id") < first) | isq)
+        .select("vec_id", "embedding", isq.alias("__q"))
+        .collect()
+    ):
+        e = np.array(r["embedding"], np.float64)
+        head[int(r["vec_id"])] = e
+        if r["__q"]:
+            queries.append((int(r["vec_id"]), e))
+    sample = _train_sample(_vec_frame(embeddings), train_fraction).persist()
+    q = _Quantizer()
+    if n_seeds is not None:
+        seeds = [(i, e, dot_fold_np(e, e)) for i, e in head.items() if i < n_seeds]
+        q = _lloyd(sample, _Quantizer(_cents_np(seeds)), kmeans_iters)
+    if n_codes is not None:
+        ids = sorted(i for i in head if i < n_codes)
+        x = q.subvectors(q.residual(np.array([head[i] for i in ids]))[1])
+        xn = dot_fold_np(x, x)
+        init = [
+            (s, i, x[j, s], xn[j, s])
+            for j, i in enumerate(ids)
+            for s in range(x.shape[1])
+        ]
+        q = _lloyd(sample, _Quantizer(q.cents, _book_np(init)), pq_iters)
+    sample.unpersist()
+    return q, queries
+
+
+def _probes(q: _Quantizer, queries: list, nprobe: int) -> list:
+    """Per query, its ``nprobe`` nearest cells in the ascending
+    (−cosine, cell) order of :func:`_probe_cells_lit`, each with q·c and
+    the ADC term table of the query's residual: [(q_id, cell, qdotc,
+    terms)]. Plain PQ: one entry per query with cell and qdotc None."""
+    out = []
+    for q_id, qe in queries:
+        if q.cents is None:
+            out.append((q_id, None, None, q.lut(qe)))
+            continue
+        cells, ce, cn = q.cents
+        neg = -_divide(
+            dot_fold_np(qe[None], ce), np.sqrt(dot_fold_np(qe, qe)) * np.sqrt(cn)
+        )
+        for j in np.lexsort((cells, neg))[:nprobe]:
+            qdotc = float(dot_fold_np(qe, ce[j]))
+            out.append((q_id, int(cells[j]), qdotc, q.lut(qe - ce[j])))
+    return out
+
+
+def _batch_codes(q: _Quantizer, batch):
+    """(vec_id, cell label or None, code indices) of a batch of raw
+    vectors (``embedding``), or of stored codes (``cell``, ``codes``)."""
+    if "codes" in batch.schema.names:
+        ids = batch.column("vec_id").to_numpy(zero_copy_only=False)
+        cell = batch.column("cell").to_numpy(zero_copy_only=False)
+        labels = (
+            batch.column("codes").flatten().to_numpy(zero_copy_only=False)
+            .reshape(len(ids), -1)
+        )
+        book = q.book[0]
+        codes = np.stack(
+            [np.searchsorted(book[s], labels[:, s]) for s in range(labels.shape[1])],
+            axis=1,
+        ).clip(0, book.shape[1] - 1)
+        if (np.take_along_axis(book.T, codes, axis=0) != labels).any():
+            raise ValueError("stored code not in the stored codebook")
+        return ids.astype(np.int64), cell.astype(np.int64), codes
+    ids, e = _arrow_vectors(batch)
+    cell, r = q.residual(e)
+    if cell is not None:
+        cell = q.cents[0][cell]
+    return ids, cell, q.encode(q.subvectors(r))
+
+
+def _codes_arrow(q: _Quantizer):
+    """``mapInArrow`` kernel of the encode pass: (vec_id, cell, codes)."""
+
+    def fn(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            ids, cell, codes = _batch_codes(q, batch)
+            labels = q.book[0][np.arange(codes.shape[1]), codes]
+            offsets = np.arange(0, labels.size + 1, codes.shape[1], dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids),
+                    pa.array(cell),
+                    pa.ListArray.from_arrays(offsets, pa.array(labels.ravel())),
+                ],
+                names=["vec_id", "cell", "codes"],
+            )
+
+    return fn
+
+
+def _topk_arrow(q: _Quantizer, probes: list, k: int):
+    """``mapInArrow`` kernel of the search pass: score every vector of a
+    probed cell against each probing query's ADC table (plus q·c), skip
+    the query itself, and keep each query's batch-local top-k under the
+    final order (score DESC, vec_id) — the local half of the
+    local-then-global top-k (Continuously Adaptive Similarity Search,
+    SIGMOD 2020): the global top-k is a subset of the union of the
+    local ones, so the rank window over them returns it exactly."""
+
+    def fn(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            ids, cell, codes = _batch_codes(q, batch)
+            hits: dict[int, list] = {}
+            for q_id, c, qdotc, terms in probes:
+                mask = ids != q_id
+                if c is not None:
+                    mask &= cell == c
+                at = np.flatnonzero(mask)
+                if len(at):
+                    score = adc_np(terms, codes[at])
+                    if qdotc is not None:
+                        score = qdotc + score
+                    hits.setdefault(q_id, []).append((at, score))
+            for q_id, parts in hits.items():
+                at = np.concatenate([a for a, _ in parts])
+                score = np.concatenate([s for _, s in parts])
+                keep = np.lexsort((ids[at], -score))[:k]
+                at, score = at[keep], score[keep]
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.full(len(at), q_id, np.int64)),
+                        pa.array(ids[at]),
+                        pa.nulls(len(at), pa.int64())
+                        if cell is None
+                        else pa.array(cell[at]),
+                        pa.array(score),
+                    ],
+                    names=["q_id", "vec_id", "cell", "score"],
+                )
+
+    return fn
+
+
+def _ranked(frame: DataFrame, q: _Quantizer, probes: list, k: int) -> DataFrame:
+    """The global half of the top-k: the locals of one Arrow pass over
+    ``frame``, ranked per query by (score DESC, vec_id)."""
+    local = frame.mapInArrow(
+        _topk_arrow(q, probes, k),
+        "q_id bigint, vec_id bigint, cell bigint, score double",
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("vec_id"))
     return (
-        f"transform(transform(transform(sequence(0, {PQ_M - 1}), "
-        f"sidx -> struct(sidx AS s, {slice_x} AS x)), "
-        f"sv0 -> struct(sv0.s AS s, sv0.x AS x, {xn} AS xn)), "
-        f"sv -> {argmin})"
+        local.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= k)
+        .withColumnRenamed("vec_id", "neighbor_id")
     )
 
 
-def _lut_arr_sql(e: str = "e") -> str:
-    """SQL (over ``__cb``): the per-query ADC lookup table as an
-    in-row array indexed by ``s`` of ``map<code, q·c_code>`` — exact
-    ``dot_fold`` dots of the query('s residual) subvectors against the
-    literal codebook, built in one projection on the (tiny) query side
-    instead of a posexplode + broadcast-join LUT frame."""
-    slice_x = f"slice({e}, sidx * {PQ_SUBDIM} + 1, {PQ_SUBDIM})"
-    dot = dot_fold("sv.x", "k.ce")
-    return (
-        f"transform(transform(sequence(0, {PQ_M - 1}), "
-        f"sidx -> struct(sidx AS s, {slice_x} AS x)), "
-        "sv -> map_from_entries(transform(element_at(__cb, sv.s + 1), "
-        f"k -> struct(k.code, {dot}))))"
-    )
-
-
-# The ADC score: Σ_s floor(LUT[s][code_s]·1e9 + 0.5) as exact BIGINT
-# adds (associative — any order gives the sum the grouped F.sum
-# produced), finished with the same single double division.
-_ADC_SUM_SQL = (
-    f"CAST(aggregate(sequence(0, {PQ_M - 1}), CAST(0 AS BIGINT), "
-    "(acc2, sidx) -> acc2 + CAST(floor("
-    f"element_at(element_at(__luts, sidx + 1), element_at(codes, sidx + 1))"
-    f" * {ADC_SCALE} + 0.5) AS BIGINT)) AS DOUBLE) / {ADC_SCALE}"
-)
+def _vec_frame(embeddings: DataFrame) -> DataFrame:
+    return embeddings.select(F.col("vec_id").cast("bigint"), "embedding")
 
 
 def pq_codebooks(
@@ -1005,92 +1214,16 @@ def pq_codebooks(
 
     Init = the subvectors of the first ``n_codes`` vectors by vec_id
     (deterministic, mirroring ivf_cells_kmeans seeding), refined by
-    ``n_iters`` Lloyd rounds run for ALL subspaces at once: assignment
-    is one broadcast join + struct-max argmin keyed (vec_id, s); the
-    centroid update is ONE grouped pass keyed (s, code) with
-    PQ_SUBDIM exact fixed-point decimal sums — M sub-quantizers never
-    cost M separate shuffles. Codewords that lose all members drop out
-    deterministically in both engines.
-
-    At 100 TB the codebook is M·K rows (bounded), the training scans
-    are n_iters passes over the persisted deterministic sample (FAISS
-    practice — encode everything, train on a sample), and every
-    exchange carries only partial-aggregated rows. Per round, the
-    M·K-row codebook is
-    materialized to the driver and re-created as a literal frame — the
-    same bounded-state pattern (and rationale) as ivf_cells_kmeans:
-    unrolled Lloyd lineage grows exponentially in n_iters.
-    """
-    sv = _subvectors(_vectors(embeddings))
-    spark = embeddings.sparkSession
-    rows = _pq_train_rows(sv, n_codes, n_iters)
-    return spark.createDataFrame(
-        rows, schema="s int, code bigint, ce array<double>, cn double"
+    ``n_iters`` Lloyd rounds run for ALL subspaces at once (:func:`_lloyd`
+    — M sub-quantizers never cost M separate passes). Codewords that
+    lose all members drop out deterministically in both engines. At
+    100 TB the codebook is M·K rows (bounded) and the training scans are
+    passes over the persisted deterministic sample (FAISS practice —
+    encode everything, train on a sample)."""
+    q, _ = _fit(embeddings, None, 0, n_codes, n_iters)
+    return embeddings.sparkSession.createDataFrame(
+        q.cb_rows(), schema="s int, code bigint, ce array<double>, cn double"
     )
-
-
-def _pq_train_rows(
-    sv: DataFrame,
-    n_codes: int,
-    n_iters: int,
-    train_fraction: float = TRAIN_FRACTION,
-) -> list:
-    """The Lloyd loop of :func:`pq_codebooks`, over any prepared
-    subvector frame (vec_id, s, x, xn) — also trains the RESIDUAL
-    sub-quantizers of :func:`ivfpq_topk`. Refinement runs on the
-    deterministic training sample (:func:`_train_sample`), persisted
-    across rounds; only code ASSIGNMENT (done by callers) sees the
-    full corpus. Returns the collected codebook ROWS (s, code, ce, cn)
-    — the same bounded M·K driver state every round materialized —
-    so callers assign codes IN-ROW over the literal codebook (r15,
-    guide §2.4): each round is ONE grouped-means job; the per-round
-    assignment crossJoin + argmin exchange of the r14 spelling is
-    gone. Arithmetic unchanged — codebooks are bit-identical."""
-    cb_rows = (
-        sv.filter(F.col("vec_id") < n_codes)
-        .select(
-            "s",
-            F.col("vec_id").alias("code"),
-            F.col("x").alias("ce"),
-            F.col("xn").alias("cn"),
-        )
-        .collect()
-    )
-    tsv = _spread(_train_sample(sv, train_fraction)).persist()
-    scale = F.lit(float(MEAN_SCALE))
-    for _ in range(n_iters):
-        member = _assign_codes_member(tsv, cb_rows)
-        sums = member.groupBy("s", "code").agg(
-            F.count(F.lit(1)).alias("__n"),
-            *[
-                F.sum(
-                    F.floor(F.col("x")[i] * scale).cast("decimal(38,0)")
-                ).alias(f"__s{i}")
-                for i in range(PQ_SUBDIM)
-            ],
-        )
-        cb = sums.select(
-            "s",
-            "code",
-            F.array(
-                *[
-                    F.col(f"__s{i}").cast("double") / scale / F.col("__n")
-                    for i in range(PQ_SUBDIM)
-                ]
-            ).alias("ce"),
-        ).withColumn("cn", F.expr(dot_fold("ce", "ce")))
-        cb_rows = cb.collect()
-    tsv.unpersist()
-    return cb_rows
-
-
-def _assign_codes_member(sv: DataFrame, cb_rows) -> DataFrame:
-    """``sv`` + its in-row ``code`` column (projection — the join-free
-    member frame the Lloyd means pass consumes)."""
-    code = F.expr(
-        _code_argmin_sql("x", "xn", "element_at(__cb, s + 1)")
-    )
-    return _cb_attach(sv, cb_rows).withColumn("code", code)
 
 
 def pq_topk(
@@ -1103,60 +1236,26 @@ def pq_topk(
     """PQ/ADC approximate top-k by inner product: (q_id, neighbor_id,
     approx_dot, rank).
 
-    The compressed index is the code table (vec_id, s, code) — M small
-    ints per vector instead of EMB_DIM floats (here M=32 codes over 64
-    floats, K=32 codewords per sub-codebook: 32 bytes vs 256, 8×
-    compression at byte codes; ADVICE r04). Search is asymmetric distance
-    computation: each query builds an M·K lookup table of exact
-    subspace dots against the codebook (bounded — broadcast), the
-    corpus code rows join it map-side, and the per-(q, vec) score is a
-    fixed-point SUM over the M looked-up entries — partial aggregation
-    makes the only exchange carry ≤ N·|Q| pre-aggregated rows. No
-    full-width vector is touched at search time; at 100 TB the scan
-    reads the code table (M bytes/vector), not the embeddings.
+    The compressed index is M small codes per vector instead of EMB_DIM
+    floats (here M=32 codes over 64 floats, K=32 codewords per
+    sub-codebook: 32 bytes vs 256, 8× compression at byte codes; ADVICE
+    r04). Search is asymmetric distance computation: each query's M·K
+    lookup table of exact subspace dots against the codebook is built on
+    the driver, and ONE Arrow pass encodes the corpus and scores every
+    vector as the fixed-point Σ over its M looked-up entries, keeping a
+    local top-k per query; the rank window merges the locals. No
+    full-width vector is touched at search time by a stored index
+    (:func:`search_ivfpq_index`); at 100 TB the scan reads M bytes per
+    vector, not the embeddings.
 
     Ranking is by the ADC approximation of the raw inner product
     (standard PQ practice; a production pipeline re-ranks the short
     list with exact dots — composable here as cosine_topk over the
     candidate ids).
     """
-    # r15 (guide §2.4/§8): encode, LUT and the ADC sum all run IN-ROW
-    # over the literal codebook — the corpus side is ONE projection
-    # (vec_id, codes[M]) with no posexplode and no (s, code) join, the
-    # query side is |Q| rows carrying their M lookup maps, attached by
-    # a broadcast cross (|Q| bounded by query_pred — the repo's
-    # adjudicated one-row-broadcast-cross pattern), and the per-pair
-    # score is the same exact Σ floor(val·1e9 + 0.5) BIGINT fold the
-    # grouped sum produced. The N·M·K scored intermediate and its
-    # partial-agg exchange are gone; the only exchanges left are the
-    # rank window and the caller's output sort. Bit-identical results.
-    v = _vectors(embeddings)
-    cb_rows = _pq_train_rows(_subvectors(v), n_codes, n_iters)
-    vcodes = (
-        _cb_attach(_spread(v), cb_rows)
-        .withColumn("codes", F.expr(_codes_arr_sql("e")))
-        .select("vec_id", "codes")
-    )
-    qlut = (
-        _cb_attach(v.filter(query_pred), cb_rows)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.expr(_lut_arr_sql("e")).alias("__luts"),
-        )
-    )
-    scored = (
-        vcodes.join(F.broadcast(qlut), F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id", "vec_id", F.expr(_ADC_SUM_SQL).alias("approx_dot")
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("approx_dot").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "approx_dot", "rank")
+    q, queries = _fit(embeddings, None, 0, n_codes, n_iters, query_pred)
+    return _ranked(_vec_frame(embeddings), q, _probes(q, queries, 1), k).select(
+        "q_id", "neighbor_id", F.col("score").alias("approx_dot"), "rank"
     )
 
 
@@ -1186,105 +1285,40 @@ def ivfpq_topk(
     Decomposition is exact: q·x = q·c + q·r with r = x − c, and the
     only approximation is r → its codeword — the standard IVFPQ error
     model. Every arithmetic step (centroid means, residual subtract,
-    dots, the ADC sum) is the engine-exact fixed-point machinery the
-    component operators already gate, so the full index hash-matches
-    the DuckDB oracle.
+    dots, the ADC sum) is the engine-exact fixed-point machinery, so the
+    full index hash-matches the DuckDB oracle.
 
-    Scale: the stored index is cell id + M codes per vector (here
-    8 + 32 bytes vs 256 B of floats); search touches only the probed
-    cells' code rows, the LUT is Q·nprobe·M·K rows (bounded —
-    broadcast), and the score aggregation partial-aggregates to
-    ≤ |probed candidates| rows before its exchange.
+    Jobs: one bounded collect (seeds, PQ seeds, queries), one Arrow pass
+    per Lloyd round, then ONE pass over the corpus that encodes each
+    vector, scores the probed cells against the queries' tables and
+    keeps local top-k's, ranked by one window. Probe ranking, q·c and
+    the tables are driver work over the K centroids and M·K codewords.
 
-    The coarse-assignment and residual frames stay persisted for the
-    life of the returned lazy plan (the plan reads them; unpersisting
-    here would recompute the argmax cross per pass). A long-lived
-    session issuing many calls can pass ``cache_registry=[]`` — the
-    frames left cached are appended to it, to ``unpersist()`` once the
-    result is consumed (ADVICE r05; the serving path,
-    ``build_ivfpq_index``, already unpersists eagerly).
+    ``cache_registry`` is kept for API compatibility: nothing outlives
+    the call (the training sample unpersists once trained).
     """
     if nprobe < 1 or nprobe > n_seeds:
         raise ValueError("nprobe must be in 1..n_seeds")
-    # r15 (guide §2.4/§8): the whole index side — coarse assignment,
-    # residual, PQ encode — is ONE in-row projection over the literal
-    # centroid/codebook state (both already materialize to the driver
-    # per training round): the r14 spelling's persisted cells frame,
-    # its two vec_id re-joins, the posexplode'd residual frame, the
-    # probe window, and the (cell, s, code) LUT join + grouped ADC
-    # exchange are all gone — the only exchanges left are the rank
-    # window and the caller's output sort. Training still runs on the
-    # persisted deterministic sample; every arithmetic step is
-    # unchanged, so the index and search results are bit-identical
-    # (oracle-verified). ``cache_registry`` is kept for API
-    # compatibility — nothing outlives the call anymore (training
-    # samples unpersist inside their loops).
     del cache_registry
-    va, cent_rows = _kmeans_state(embeddings, n_seeds, kmeans_iters)
-    vac = _with_cells_lit(
-        _spread(_vectors(embeddings)), cent_rows, keep_centroid=True
+    q, queries = _fit(
+        embeddings, n_seeds, kmeans_iters, n_codes, pq_iters, query_pred
     )
-    res = vac.select(
-        "vec_id",
-        "cell",
-        F.expr("zip_with(e, __ce, (a, b) -> a - b)").alias("e"),
-    )
-    cb_rows = _pq_train_rows(
-        _subvectors(res.select("vec_id", "e")), n_codes, pq_iters
-    )
-    codes = (
-        _cb_attach(res, cb_rows)
-        .withColumn("codes", F.expr(_codes_arr_sql("e")))
-        .select("vec_id", "cell", "codes")
-    )
+    return _ranked(
+        _vec_frame(embeddings), q, _probes(q, queries, nprobe), k
+    ).select("q_id", "neighbor_id", "cell", F.col("score").alias("approx_ip"), "rank")
 
-    # probe ranking: nprobe nearest centroids per query by cosine —
-    # in-row sorted slice over the literal centroids (same order as
-    # the window spelling); the probed centroid rides along, so the
-    # q·c term, the query residual and its LUT maps are one projection
-    q = va.filter(query_pred).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("e").alias("qe"),
-        F.col("norm2").alias("qn"),
-    )
-    qlut = (
-        _probe_cells_lit(q, cent_rows, nprobe)
-        .select(
-            "q_id",
-            "cell",
-            F.expr(dot_fold("qe", "ce")).alias("qdotc"),
-            F.expr("zip_with(qe, ce, (a, b) -> a - b)").alias("e"),
-        )
-        .transform(lambda d: _cb_attach(d, cb_rows))
-        .select(
-            "q_id", "cell", "qdotc", F.expr(_lut_arr_sql("e")).alias("__luts")
-        )
-    )
 
-    scored = (
-        codes.join(F.broadcast(qlut), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            "cell",
-            (F.col("qdotc") + F.expr(_ADC_SUM_SQL)).alias("approx_ip"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("approx_ip").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cell",
-            "approx_ip",
-            "rank",
-        )
-    )
+def _code_rows(frame: DataFrame, q: _Quantizer) -> DataFrame:
+    """The stored code-table grain (vec_id, s, code, cell) of ``frame``."""
+    return frame.mapInArrow(
+        _codes_arrow(q), "vec_id bigint, cell bigint, codes array<bigint>"
+    ).select("vec_id", F.posexplode("codes").alias("s", "code"), "cell")
+
+
+def _stored_quantizer(spark: SparkSession, path: str) -> _Quantizer:
+    cents = spark.read.parquet(f"{path}/centroids").select("cell", "ce", "cn")
+    book = spark.read.parquet(f"{path}/codebooks").select("s", "code", "ce", "cn")
+    return _Quantizer(_cents_np(cents.collect()), _book_np(book.collect()))
 
 
 def build_ivfpq_index(
@@ -1312,39 +1346,16 @@ def build_ivfpq_index(
     (asserted in tests).
     """
     spark = embeddings.sparkSession
-    # r15: same in-row build as ivfpq_topk (guide §2.4) — assignment,
-    # residual and encode are one projection; the stored layout and
-    # every stored value are byte-identical to the r14 build (doubles
-    # round-trip parquet bit-exactly; asserted in tests).
-    _, cent_rows = _kmeans_state(embeddings, n_seeds, kmeans_iters)
-    vac = _with_cells_lit(
-        _spread(_vectors(embeddings)), cent_rows, keep_centroid=True
-    )
-    res = vac.select(
-        "vec_id", "cell", F.expr("zip_with(e, __ce, (a, b) -> a - b)").alias("e")
-    )
-    cb_rows = _pq_train_rows(
-        _subvectors(res.select("vec_id", "e")), n_codes, pq_iters
-    )
-    cents = spark.createDataFrame(
-        cent_rows, schema="cell bigint, ce array<double>, cn double"
-    )
-    cb = spark.createDataFrame(
-        cb_rows, schema="s int, code bigint, ce array<double>, cn double"
-    )
-    codes = (
-        _cb_attach(res, cb_rows)
-        .select(
-            "vec_id",
-            F.posexplode(F.expr(_codes_arr_sql("e"))).alias("s", "code"),
-            "cell",
-        )
-    )
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    cb.write.mode("overwrite").parquet(f"{path}/codebooks")
-    codes.write.mode("overwrite").partitionBy("cell").parquet(
-        f"{path}/codes"
-    )
+    q, _ = _fit(embeddings, n_seeds, kmeans_iters, n_codes, pq_iters)
+    spark.createDataFrame(
+        q.cent_rows(), schema="cell bigint, ce array<double>, cn double"
+    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    spark.createDataFrame(
+        q.cb_rows(), schema="s int, code bigint, ce array<double>, cn double"
+    ).write.mode("overwrite").parquet(f"{path}/codebooks")
+    _code_rows(_vec_frame(embeddings), q).write.mode("overwrite").partitionBy(
+        "cell"
+    ).parquet(f"{path}/codes")
 
 
 def search_ivfpq_index(
@@ -1357,89 +1368,30 @@ def search_ivfpq_index(
 ) -> DataFrame:
     """ADC probe search over a stored IVF-PQ index (build_ivfpq_index).
 
-    The centroid and codebook tables are bounded → broadcast; the code
-    table is read WITH the probed-cell predicate, which Spark turns
-    into partition pruning on the ``cell=`` leaf dirs — the scan
-    touches nprobe/K of the index. Arithmetic is identical to
-    ivfpq_topk, so results match the in-line operator exactly.
+    The centroid and codebook tables are bounded index metadata,
+    collected once; probe ranking, q·c and the query tables are driver
+    work, exactly as in :func:`ivfpq_topk`. The code table is read WITH
+    the probed-cell predicate, which Spark turns into partition pruning
+    on the ``cell=`` leaf dirs — the scan touches nprobe/K of the index.
+    Each vector's M stored code rows are gathered back into its code
+    array and scored by the same Arrow kernel as the in-line operator,
+    so results match it exactly.
     """
-    # r15 (guide §2.4): centroids and codebooks are bounded index
-    # METADATA (K and M·K rows) — collect them once and run probe
-    # ranking, the q·c term, the query residual and its LUT maps as
-    # one in-row projection over the literals, exactly like the
-    # in-line ivfpq_topk: the probe window, the centroid re-join and
-    # the posexplode'd LUT frame disappear from the search plan. The
-    # code-table scan and its (cell, s, code) scoring join are
-    # unchanged (the stored grain IS (vec_id, s, code)).
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
-    cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
-    codes = spark.read.parquet(f"{path}/codes")
-
-    v = _vectors(embeddings)
-    q = v.filter(query_pred).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("e").alias("qe"),
-        F.col("norm2").alias("qn"),
+    q = _stored_quantizer(spark, path)
+    queries = [
+        (int(r["vec_id"]), np.array(r["embedding"], np.float64))
+        for r in embeddings.filter(query_pred).select("vec_id", "embedding").collect()
+    ]
+    probes = _probes(q, queries, nprobe)
+    codes = (
+        spark.read.parquet(f"{path}/codes")
+        .filter(F.col("cell").isin(sorted({p[1] for p in probes})))
+        .groupBy("vec_id", "cell")
+        .agg(F.sort_array(F.collect_list(F.struct("s", "code"))).alias("__sc"))
+        .select("vec_id", "cell", F.col("__sc.code").alias("codes"))
     )
-    qp = _probe_cells_lit(q, cent_rows, nprobe)
-    qr = qp.select(
-        "q_id",
-        "cell",
-        F.expr(dot_fold("qe", "ce")).alias("qdotc"),
-        F.expr("zip_with(qe, ce, (a, b) -> a - b)").alias("e"),
-    )
-    slices = F.array(
-        *[
-            F.slice(F.col("e"), s * PQ_SUBDIM + 1, PQ_SUBDIM)
-            for s in range(PQ_M)
-        ]
-    )
-    qsv = qr.select(
-        "q_id", "cell", "qdotc", F.posexplode(slices).alias("s", "qx")
-    )
-    cb = spark.createDataFrame(
-        cb_rows, schema="s int, code bigint, ce array<double>, cn double"
-    )
-    lut = qsv.join(F.broadcast(cb), "s").select(
-        "q_id", "cell", "qdotc", "s", "code",
-        F.expr(dot_fold("qx", "ce")).alias("val"),
-    )
-    # probed-cell predicate reaches the partitioned scan (pruned leaves)
-    probed = [r.cell for r in qp.select("cell").distinct().collect()]
-    scored = (
-        codes.filter(F.col("cell").isin(probed))
-        .join(F.broadcast(lut), ["cell", "s", "code"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id", "cell")
-        .agg(
-            F.max("qdotc").alias("__qdotc"),
-            (
-                F.sum(
-                    F.floor(F.col("val") * F.lit(float(ADC_SCALE)) + 0.5)
-                ).cast("double")
-                / F.lit(float(ADC_SCALE))
-            ).alias("__adc"),
-        )
-        .select(
-            "q_id",
-            "vec_id",
-            "cell",
-            (F.col("__qdotc") + F.col("__adc")).alias("approx_ip"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("approx_ip").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cell",
-            "approx_ip",
-            "rank",
-        )
+    return _ranked(codes, q, probes, k).select(
+        "q_id", "neighbor_id", "cell", F.col("score").alias("approx_ip"), "rank"
     )
 
 
@@ -1453,16 +1405,10 @@ def add_to_ivfpq_index(
     partitioned code table. Append is per-cell leaf-dir parquet append —
     bounded by the new batch, never touching existing files.
     """
-    cents = spark.read.parquet(f"{path}/centroids")
-    cb = spark.read.parquet(f"{path}/codebooks")
-    v = _vectors(new_embeddings)
-    cells = _assign_cells(v, cents)
-    member = v.join(cells, "vec_id").join(F.broadcast(cents), "cell")
-    res = member.select(
-        "vec_id", F.expr("zip_with(e, ce, (a, b) -> a - b)").alias("e")
-    )
-    codes = _assign_codes(_subvectors(res), cb).join(cells, "vec_id")
-    codes.write.mode("append").partitionBy("cell").parquet(f"{path}/codes")
+    q = _stored_quantizer(spark, path)
+    _code_rows(_vec_frame(new_embeddings), q).write.mode("append").partitionBy(
+        "cell"
+    ).parquet(f"{path}/codes")
 
 
 KNN_K = 5  # neighbors per vector in the k-NN graph

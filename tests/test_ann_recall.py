@@ -21,6 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_end_to_end_airflow_bigquery_spark.operators import similarity as S
+from helpers.ann_reference import _assign_codes, _subvectors
 
 SF = "/root/testdata/sf0.01"
 PRED = "vec_id < 20"
@@ -243,7 +244,7 @@ def test_pq_codebook_shape_and_code_range(spark, clustered):
     assert {r.s for r in rows} == set(range(S.PQ_M))
     assert all(0 <= r.code < S.PQ_K for r in rows)
     assert all(len(r.ce) == S.PQ_SUBDIM for r in rows)
-    codes = S._assign_codes(S._subvectors(S._vectors(clustered)), cb)
+    codes = _assign_codes(_subvectors(S._vectors(clustered)), cb)
     n = clustered.count()
     assert codes.count() == n * S.PQ_M  # every vector fully encoded
 

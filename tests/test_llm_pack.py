@@ -336,9 +336,7 @@ def test_bpe_apply_merge_greedy_left_to_right(spark):
     consecutive disjoint occurrences all merge."""
     from pyspark.sql import functions as F
 
-    from etl_end_to_end_airflow_bigquery_spark.plans.queries_ext import (
-        _bpe_apply_merge,
-    )
+    from helpers.bpe_reference import _bpe_apply_merge
 
     df = spark.createDataFrame(
         [(["a", "a", "a"],), (["a", "b", "a", "b", "c"],), (["x"],), ([],)],
@@ -484,10 +482,7 @@ def test_bpe_sparse_fold_equals_dense_fold(spark):
 
     from pyspark.sql import functions as F
 
-    from etl_end_to_end_airflow_bigquery_spark.plans.queries_ext import (
-        _bpe_apply_merge,
-        _bpe_apply_merge_sparse,
-    )
+    from helpers.bpe_reference import _bpe_apply_merge, _bpe_apply_merge_sparse
 
     rng = random.Random(709)
     cases = [
@@ -524,11 +519,10 @@ def test_bpe_py_merge_equals_in_row_folds(spark):
     from pyspark.sql import functions as F
 
     from etl_end_to_end_airflow_bigquery_spark.plans.queries_ext import (
-        _bpe_apply_merge,
-        _bpe_apply_merge_sparse,
         _bpe_merge_list_column,
         _bpe_py_merge,
     )
+    from helpers.bpe_reference import _bpe_apply_merge, _bpe_apply_merge_sparse
 
     rng = random.Random(1541)
     cases = [

@@ -6,6 +6,8 @@ these fail before any benchmark notices.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from etl_end_to_end_airflow_bigquery_spark.plans import QUERIES
@@ -187,11 +189,11 @@ def test_duplicate_spans_shuffles_hashes_not_text(spark):
 def test_pq_adc_no_cartesian_and_partial_aggs(spark):
     plan = _formatted(spark, "pq_topk_adc")
     assert "CartesianProduct" not in plan
-    # r15 in-row ADC: the corpus side is a projection (codes computed
-    # in-row over the broadcast codebook), the bounded query side
-    # attaches by broadcast — the adjudicated one-row-broadcast-cross
-    # pattern; no (s, code) join and no score-sum aggregation exchange
-    # remain. The only hash exchange left is the per-query rank window.
-    assert "BroadcastNestedLoopJoin" in plan
+    # The corpus side is ONE Arrow map stage (encode, ADC score and a
+    # local top-k per query against driver-built lookup tables): no
+    # broadcast cross, no (s, code) join, no score-sum aggregation. The
+    # only hash exchange left is the global rank window on q_id.
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "HashAggregate" not in plan
+    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.MULTILINE)) == 1
     assert "hashpartitioning(q_id" in plan  # the rank window's exchange
-    assert "HashAggregate" not in plan  # score-sum aggregation gone

@@ -583,8 +583,14 @@ def test_mg_candidates_non_string_items(spark):
         mg_candidates,
     )
 
+    # item 0 holds over half of every contiguous range partition, so it
+    # beats the 1/(k+1) prune on any core count; a flat id % 7 leaves
+    # every item of a 250-row partition at or below the (k+1)-th count
+    # and the summary correctly empty
     df = spark.range(0, 1000).select(
-        (F.col("id") % 7).alias("user_id")
+        F.when(F.col("id") % 2 == 0, F.lit(0).cast("bigint"))
+        .otherwise(F.col("id") % 7)
+        .alias("user_id")
     )
     got = mg_candidates(df, "user_id", 3)
     assert dict(got.dtypes)["user_id"] == "bigint"

@@ -63,6 +63,13 @@ ARROW_OK = {
     # queries stay oracle-hash-equal
     "bpe_train_merges",
     "bpe_encode_corpus",
+    # the mapInArrow surface demo: byte-class counts on raw Arrow batches
+    "multimodal_arrow_stats",
+    # quantizer kernels: ONE Arrow pass encodes, scores and keeps local
+    # top-k's — exact numpy twins of the fixed-point folds
+    "ivfpq_topk_adc",
+    "pq_topk_adc",
+    "ivfpq_rerank_topk",  # the same IVF-PQ pass, then the exact rerank
 }
 
 # Queries whose BroadcastNestedLoopJoin builds a ≤-handful-of-rows side —
@@ -90,13 +97,7 @@ BNLJ_OK = {
     "bigram_logprob_docs",  # 1-row (T, V) LM-normalizer scalar broadcast
     "mix_sources_tokens",  # 1-row (total, n_sources) scalar broadcast
     "semantic_dedup_kmeans",  # K-centroid broadcast per Lloyd round
-    "ivfpq_topk_adc",  # K-centroid + M*K-codebook broadcasts + probe rank
-    # r15 in-row ADC: the one-row codebook broadcast (_cb_attach) and
-    # the 5-row query-LUT broadcast cross replace the (s, code) join +
-    # score aggregation — same bounded-side pattern as ivfpq_topk_adc
-    "pq_topk_adc",
     "dq_expectations_orders",  # 1-row totals frame joined to the report
-    "ivfpq_rerank_topk",  # same bounded broadcasts as ivfpq_topk_adc
     "hybrid_rrf_retrieval",  # 1-row dense query vector broadcast cross
     "triangle_count_dedup",  # two 1-row census frames crossed at the end
     "corpus_drift_chi2",  # 1-row (S1, S2) side-totals scalar broadcast
@@ -104,9 +105,6 @@ BNLJ_OK = {
     "funnel_time_to_convert",  # 1-row (cuts, n) scalar broadcast cross
     "misra_gries_heavy_hitters",  # 1-row corpus-total scalar broadcast
     "mmr_rerank_topk",  # 5-row query-side broadcast cross (cosine_topk)
-    # r13 serving path: the same bounded broadcasts as ivfpq_topk_adc
-    # (K centroids, M*K codebooks, 5-row query side) feeding the rerank
-    "mmr_rerank_stored",
 }
 
 # Structurally-high exchange counts with a justification.
@@ -198,18 +196,10 @@ EXCHANGES_OK = {
     # relational.global_cumsum) executes it once; the deduplicated
     # depth is ~4 keyed shuffles, fixed.
     "session_concurrency_daily",
-    # coarse quantizer (exempted as ivf_topk_kmeans) + residual PQ
-    # round + ADC aggregation; exchanges scale with the constant
-    # iteration counts, never with data size.
-    "ivfpq_topk_adc",
     # demo query reports sketch estimate NEXT TO the exact distinct
     # count: the exact branch's expand+shuffle exists only for the
     # side-by-side; the sketch itself is two bounded-state aggregates.
     "hll_distinct_users",
-    # the two-stage retrieval composes the full IVF-PQ build (exempted
-    # as ivfpq_topk_adc) + a bounded k*fanout re-rank join; fixed
-    # pipeline depth.
-    "ivfpq_rerank_topk",
     # r13 serving path: stored-index probe search (reads the persisted
     # centroids/codebooks/codes — the training exchanges happen at
     # BUILD time inside the same gated fixture) + exact rerank of the
@@ -265,6 +255,7 @@ def audit(spark, name: str, df) -> dict:
         "python_row": plan.count("BatchEvalPython"),
         "python_arrow": plan.count("ArrowEvalPython")
         + plan.count("MapInPandas")
+        + plan.count("MapInArrow")
         + plan.count("FlatMapGroupsInPandas"),
     }
 
